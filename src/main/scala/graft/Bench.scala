@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
 
 /** Benchmark main: runs every SparkEntry query against
   * SPARK_GRAFT_SF_DIR and prints one JSON line. A failed query reports an
@@ -20,20 +20,8 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt.max(1)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // split multi-row-group fixture files into parallel scan tasks
-      // (driver sf files are one row group — no effect there; the sf1
-      // ScaleUp fixture writes 1 MB row groups so map-side text work
-      // parallelizes the way a many-split 100 TB table would)
-      .config("spark.sql.files.maxPartitionBytes", "1m")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local()
     // (query, rep) executions run in a SEEDED-SHUFFLED global order, not
     // query-by-query: consecutive reps of one query used to sit in
     // whatever session state the previous query left behind, which made
@@ -69,7 +57,7 @@ object Bench {
         // an ERROR marker (no rep line) so log post-processing can flush
         // pending memo-build attributions instead of billing them to the
         // NEXT successful query's rep (extract_bench.py; r13 ADVICE #3)
-        case _: Throwable =>
+        case NonFatal(_) =>
           System.err.println(s"[bench] $name rep=$rep ERROR")
       } finally {
         // isolate queries/reps: drop caches left by operators (minhash
@@ -92,7 +80,7 @@ object Bench {
         else {
           // re-run once outside the sampling loop to capture the error
           val err = try { fn(spark, sfDir).count(); "flaky: passed on retry" }
-            catch { case e: Throwable =>
+            catch { case NonFatal(e) =>
               Option(e.getMessage).getOrElse(e.getClass.getName).take(120) }
           name -> Left(err)
         }
@@ -130,7 +118,7 @@ object Bench {
     //     yields real numbers instead of a mid-line fragment.
     try java.nio.file.Files.writeString(
       java.nio.file.Paths.get("BENCH_full_last.json"), full + "\n")
-    catch { case _: Throwable => () }
+    catch { case NonFatal(_) => () }
     val slowest = results.collect { case (k, Right(v)) => (k, v) }
       .sortBy(-_._2)
     val head = s"""{"metric":"total","value":$total,"unit":"sec","memo_build_sec":$memoSec,"n_queries":${results.size},"errors":$nErr,"sf":"$sfDir","queries_file":"BENCH_full_last.json","queries":{"""

@@ -43,8 +43,10 @@ object Memo {
   private val values =
     mutable.Map.empty[SparkSession, mutable.Map[String, Any]]
 
-  /** Cumulative wall nanoseconds spent in memo BUILDS ([[cached]] and
-    * [[cachedValue]]) across the JVM — the bench's honesty counter:
+  /** Cumulative wall nanoseconds spent in OUTERMOST memo builds
+    * ([[cached]] and [[cachedValue]]) across the JVM — a build nested in
+    * another's is already inside its parent's time, so it is not added
+    * again. This is the bench's honesty counter:
     * one-time builds land in whichever rep runs first and the per-query
     * MEDIAN of interleaved reps discards them, so Bench adds
     * `memo_build_sec` ( = [[buildSeconds]]) to its stdout JSON line and
@@ -54,6 +56,23 @@ object Memo {
 
   /** Total memo-build seconds so far in this JVM. */
   def buildSeconds: Double = buildNanos.get / 1e9
+
+  /** Memo builds in progress on this thread. */
+  private val buildDepth = new ThreadLocal[Int] { override def initialValue = 0 }
+
+  /** Run `build`, returning its value and wall nanoseconds; only an
+    * outermost build adds to [[buildNanos]]. */
+  private def timedBuild[T](build: => T): (T, Long) = {
+    val depth = buildDepth.get
+    buildDepth.set(depth + 1)
+    try {
+      val t0 = System.nanoTime()
+      val v = build
+      val dt = System.nanoTime() - t0
+      if (depth == 0) buildNanos.addAndGet(dt)
+      (v, dt)
+    } finally buildDepth.set(depth)
+  }
 
   // ── consumer registry (r18, VERDICT r17 #9) ─────────────────────────
   // Result-frame memoization sits at a cliff edge: a Memo.cached entry
@@ -115,10 +134,7 @@ object Memo {
     synchronized { valuesFor(s).get(key) } match {
       case Some(v) => v.asInstanceOf[T]
       case None =>
-        val t0 = System.nanoTime()
-        val v = build
-        val dt = System.nanoTime() - t0
-        buildNanos.addAndGet(dt)
+        val (v, dt) = timedBuild(build)
         System.err.println(f"[memo] value key=$key t=${dt / 1e9}%.1fs")
         synchronized { valuesFor(s).getOrElseUpdate(key, v).asInstanceOf[T] }
     }
@@ -147,10 +163,7 @@ object Memo {
         // artifacts unless the build cost is attributable — one stderr
         // line per build (key + seconds) lets the bench reader subtract
         // it from the paying query (VERDICT r11 #5)
-        val t0 = System.nanoTime()
-        val df = build.localCheckpoint(true)
-        val dt = System.nanoTime() - t0
-        buildNanos.addAndGet(dt)
+        val (df, dt) = timedBuild(build.localCheckpoint(true))
         System.err.println(f"[memo] build key=$key t=${dt / 1e9}%.1fs")
         val owned = checkpointIds(df)
         synchronized {

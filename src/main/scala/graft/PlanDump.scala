@@ -1,12 +1,9 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dump `.explain("formatted")` for named gate queries — the plans/r17
   * before/after evidence the optimization rounds commit. Usage:
   *   runMain graft.PlanDump <dataDir> <outDir> q_name1 q_name2 ...
-  * Same session config as Bench (master/local parallelism from
-  * SPARK_GRAFT_CPUS, shuffle partitions = cpus) so plan shapes match what
+  * Same session as Bench ([[Session.local]]) so plan shapes match what
   * the bench executes. Memoized gates materialize their family build on
   * first touch; the dumped plan is the gate's marginal plan — exactly
   * what Bench times per rep (the build cost carries its own [memo]
@@ -17,14 +14,7 @@ object PlanDump {
     val out = java.nio.file.Paths.get(args(1))
     java.nio.file.Files.createDirectories(out)
     val names = args.drop(2)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local()
     val suffix = sys.env.getOrElse("SPARK_GRAFT_PLAN_SUFFIX", "")
     names.foreach { n =>
       val fn = SparkEntry.queries.getOrElse(n,

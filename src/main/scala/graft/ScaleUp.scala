@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{SaveMode, SparkSession}
+import org.apache.spark.sql.SaveMode
 import org.apache.spark.sql.functions._
 
 /** Scale-up fixture generator: synthesize an sfN×`factor` dataset from an
@@ -50,14 +50,7 @@ object ScaleUp {
     val src = args(0)
     val out = args(1)
     val factor = if (args.length > 2) args(2).toInt else 10
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local()
 
     def copies(k: Int => org.apache.spark.sql.DataFrame) =
       (0 until factor).map(k).reduce(_ unionAll _)

@@ -1,0 +1,29 @@
+package graft
+
+import org.apache.spark.sql.SparkSession
+
+/** The one SparkSession builder for every graft main and spec, so the
+  * suite Bench times and the suite Verify and the specs check run the
+  * same configuration. `getOrCreate` makes it idempotent within a JVM. */
+object Session {
+  /** SPARK_GRAFT_CPUS, else every core the JVM sees. */
+  private def envCpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+    .getOrElse(Runtime.getRuntime.availableProcessors)
+
+  def local(cpus: Int = envCpus): SparkSession = {
+    val spark = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus.toString)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      // split multi-row-group fixture files into parallel scan tasks
+      // (driver sf files are one row group — no effect there; the sf1
+      // ScaleUp fixture writes 1 MB row groups so map-side text work
+      // parallelizes the way a many-split 100 TB table would)
+      .config("spark.sql.files.maxPartitionBytes", "1m")
+      .config("spark.sql.warehouse.dir", Scratch.dir("warehouse"))
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+}

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.graft.GraftExtensions
 
 /** SQL entry point: registers the testdata tables as temp views plus
@@ -11,13 +10,7 @@ object Sql {
     val sfDir = args(0)
     val query = args(1)
     val n = if (args.length > 2) args(2).toInt else 20
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.local()
     GraftExtensions.register(spark)
     Seq("region", "nation", "customer", "supplier", "part", "orders", "lineitem",
       "events", "documents", "embeddings").foreach { t =>

@@ -1,23 +1,23 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+import scala.util.control.NonFatal
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the driver's DuckDB compare.
+  * Args: sfDir outDir [name ...] — trailing query names restrict the dump
+  * to that subset (the iterate-on-one-query loop); none = every query. */
 object Verify {
   def main(args: Array[String]): Unit = {
-    val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val sfDir = args(0)
+    val outDir = args(1)
+    val names = if (args.length > 2) args.drop(2).toSet else SparkEntry.queries.keySet
+    val unknown = names -- SparkEntry.queries.keySet
+    require(unknown.isEmpty,
+      s"unknown queries: ${unknown.mkString(", ")} (known: ${SparkEntry.queries.keys.toSeq.sorted.mkString(", ")})")
+    val spark = Session.local()
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries.foreach { case (name, fn) =>
+    SparkEntry.queries.filter(q => names(q._1)).foreach { case (name, fn) =>
       try writeOrdered(fn(spark, sfDir), s"$outDir/$name")
-      catch { case e: Throwable =>
+      catch { case NonFatal(e) =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       } finally {
         // isolate queries (see Bench); the memo-aware sweep drops stray
@@ -41,7 +41,7 @@ object Verify {
       .coalesce(1).write.mode("overwrite").parquet(path)
   }
 
-  /** Dump SparkEntry.oracleSql as JSON (shared with VerifyOne). */
+  /** Dump SparkEntry.oracleSql as JSON. */
   def writeOracleJson(outDir: String): Unit = {
     // wrap every oracle so its rows come back in the same deterministic
     // order writeOrdered gives the Spark dump (see writeOrdered scaladoc)

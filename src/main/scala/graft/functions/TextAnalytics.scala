@@ -138,8 +138,8 @@ object TextAnalytics {
     // doc-count consumer. The tf table is NOT checkpointed although it
     // feeds both the df rollup and the probe side: materializing the
     // (doc, term, tf) table costs more than the tokenize+partial-agg it
-    // would save (measured at sf1 — the TimeTok receipt's "tokenize is
-    // not the bottleneck" conclusion, from the checkpoint side).
+    // would save (measured at sf1 — the tokenize receipt in
+    // OPTIMIZATION_r17.md: tokenize is not the bottleneck).
     val n = graft.Memo.cachedValue(s, s"documents_count:$d")(docs.count())
     val tf = docs
       .select(col("doc_id"), explode(tokens(col("text"))).as("term"))

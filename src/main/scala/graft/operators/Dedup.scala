@@ -740,8 +740,8 @@ object Dedup {
     * bound shape as [[rarePostings]]. The bucket build is ONE shuffle
     * (collect_list under the cap contract) and pairs explode bucket-local,
     * replacing the former bandRows self-join. */
-  /** (doc_id, band_idx, band_key) rows — the banded-LSH bucket keys,
-    * shared by [[bandCandidatesFromSigs]] and [[bandBucketHistogram]]. */
+  /** (doc_id, band_idx, band_key) rows — the banded-LSH bucket keys
+    * [[bandCandidatesFromSigs]] groups. */
   private def bandRows(sigs: DataFrame, bands: Int, r: Int): DataFrame = {
     val s = sigs.sparkSession
     import s.implicits._
@@ -758,25 +758,6 @@ object Dedup {
           }
         }
       }.toDF("doc_id", "band_idx", "band_key")
-  }
-
-  /** Diagnostic (r15 verdict #6): banded-LSH bucket-size histogram for
-    * the [[ngramJaccardBandedDocs]] candidate stage — one row per bucket
-    * size with the bucket count and the candidate-pair mass that size
-    * class contributes (size·(size−1)/2 per bucket, the work the
-    * maxBucket cap bounds). Reads the growth curve directly: if the
-    * per-10× postings step is driven by a FEW oversized buckets the
-    * histogram shows mass concentrating at the cap; if buckets stay
-    * small and only their NUMBER grows, the step is linear corpus
-    * growth. */
-  def bandBucketHistogram(docs: DataFrame, k: Int = 128,
-      bands: Int = 64): DataFrame = {
-    bandRows(minhashSignatures(docs, k), bands, k / bands)
-      .groupBy("band_idx", "band_key").agg(count(lit(1)).as("sz"))
-      .groupBy("sz").agg(
-        count(lit(1)).as("n_buckets"),
-        sum(col("sz") * (col("sz") - 1) / 2).cast("long").as("pair_mass"))
-      .orderBy(col("sz"))
   }
 
   private[graft] def bandCandidatesFromSigs(sigs: DataFrame, bands: Int, r: Int,
@@ -847,13 +828,12 @@ object Dedup {
 
   def ngramJaccardBandedDocs(docs: DataFrame,
       threshold: Double = 0.2, maxDf: Long = 100L,
-      k: Int = 128, bands: Int = 64, maxBucket: Int = 64,
-      prefilter: Boolean = true): DataFrame = {
+      k: Int = 128, bands: Int = 64, maxBucket: Int = 64): DataFrame = {
     require(k % bands == 0, s"k=$k must be a multiple of bands=$bands")
     ngramJaccardBandedFrom(minhashSignatures(docs, k),
       rarePostings(docs, maxDf)
         .groupBy("doc_id").agg(collect_list(col("sh")).as("shs")),
-      docSizes(docs), threshold, bands, k / bands, maxBucket, prefilter)
+      docSizes(docs), threshold, bands, k / bands, maxBucket)
   }
 
   /** The banded verify stage over prebuilt signatures, per-doc capped
@@ -892,27 +872,21 @@ object Dedup {
     * was largest. */
   private[graft] def ngramJaccardBandedFrom(sigs: DataFrame,
       docShingles: DataFrame, sizes: DataFrame, threshold: Double,
-      bands: Int = 64, r: Int = 2, maxBucket: Int = 64,
-      prefilter: Boolean = true): DataFrame = {
+      bands: Int = 64, r: Int = 2, maxBucket: Int = 64): DataFrame = {
     val cand = bandCandidatesFromSigs(sigs, bands, r, maxBucket)
     // thin per-doc metadata: uncapped denominator + capped array length
     val meta = sizes.join(
       docShingles.select(col("doc_id"),
         size(col("shs")).cast("long").as("c_n")), Seq("doc_id"))
-    val withMeta = cand
+    cand
       .join(meta.select(col("doc_id").as("a_id"), col("n_sh").as("a_n"),
         col("c_n").as("a_c")), Seq("a_id"))
       .join(meta.select(col("doc_id").as("b_id"), col("n_sh").as("b_n"),
         col("c_n").as("b_c")), Seq("b_id"))
-    // `prefilter = false` is the measurement control (A/B shuffle-byte
-    // receipts in SCALE.md), not a production mode — output is identical
-    val pruned = (if (prefilter)
-      withMeta.where(least(col("a_c"), col("b_c")).cast("double") /
+      .where(least(col("a_c"), col("b_c")).cast("double") /
         (col("a_n") + col("b_n") - least(col("a_c"), col("b_c"))).cast("double")
         >= lit(threshold - 1e-9))
-    else withMeta)
       .select("a_id", "b_id", "a_n", "b_n")
-    pruned
       .join(docShingles.select(col("doc_id").as("a_id"), col("shs").as("a_shs")), Seq("a_id"))
       .join(docShingles.select(col("doc_id").as("b_id"), col("shs").as("b_shs")), Seq("b_id"))
       .select(col("a_id"), col("b_id"), col("a_n"), col("b_n"),

@@ -31,6 +31,24 @@ class MemoSpec extends SparkTestBase {
     } finally Memo.clear(spark)
   }
 
+  test("buildSeconds counts a nested build once, inside its outer build") {
+    // the inner build runs inside the outer build's wall time, so adding
+    // both would count the inner pause twice
+    try {
+      val before = Memo.buildSeconds
+      val t0 = System.nanoTime()
+      Memo.cached(spark, "memo-spec-outer") {
+        val n = Memo.cachedValue(spark, "memo-spec-inner") { Thread.sleep(300); 2L }
+        Thread.sleep(300)
+        spark.range(n).toDF("id")
+      }
+      val wall = (System.nanoTime() - t0) / 1e9
+      val counted = Memo.buildSeconds - before
+      assert(counted >= 0.6, s"the outer build was not counted: $counted s")
+      assert(counted <= wall, s"counted $counted s of memo builds in a $wall s call")
+    } finally Memo.clear(spark)
+  }
+
   test("sweep still reclaims non-memo persistent RDDs") {
     val stray = Seq(1, 2, 3).toDF("x").cache()
     stray.count()

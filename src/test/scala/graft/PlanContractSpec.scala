@@ -1,10 +1,10 @@
 package graft
 
 /** The 100×-scale plan-shape contract, executable (r12 verdict #2):
-  * PlanAudit's cartesian / nested-loop / single-partition / codegen
-  * flags were a dev tool no spec ran, so a regression (an accidental
-  * un-broadcast crossJoin, a global window sneaking into a hot path)
-  * would only surface at the next bench. Here every gate's physical
+  * the cartesian / nested-loop / single-partition / codegen flags of
+  * the former PlanAudit dev tool were checks no spec ran, so a
+  * regression (an accidental un-broadcast crossJoin, a global window
+  * sneaking into a hot path) would only surface at the next bench. Here every gate's physical
   * plan is built at sf0.001 and checked against declared allowlists —
   * one entry, one reason. Direction of each check: flagged ⊆ allowlist
   * (a query LEAVING an allowlist is an improvement, never a failure).

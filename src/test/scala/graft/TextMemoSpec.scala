@@ -180,6 +180,6 @@ class TextMemoSpec extends SparkTestBase {
         levenshtein(col("token"), col("query_term")).as("dist"), col("c_token"))
       .distinct()
     assert(rows(Dedup.fuzzyVocabJoin(spark, sf)) == rows(direct),
-      "hash-keyed fuzzy join diverged from the string-variant build")
+      "fuzzyVocabJoin diverged from the spec-local string-variant build")
   }
 }
