@@ -187,6 +187,14 @@ object Memo {
       case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd.id
     }.toSet
 
+  /** Drop the blocks of the checkpoints `df` reads, once an operator's
+    * own intermediate has no consumers left (the harness sweep would drop
+    * them only after the whole query). */
+  def release(df: DataFrame): Unit = {
+    val live = df.sparkSession.sparkContext.getPersistentRDDs
+    checkpointIds(df).foreach(id => live.get(id).foreach(_.unpersist(false)))
+  }
+
   /** Block ids owned by s's memo entries (the checkpointed results). */
   def ownedIds(s: SparkSession): Set[Int] =
     synchronized { mapFor(s).values.flatMap(_._2).toSet }

@@ -25,8 +25,8 @@ import graft.operators.Dedup
   * Each stage strictly shrinks the corpus, and the expensive stage sees
   * only survivors of the cheap ones — the ordering that matters at
   * 100 TB. Like [[Dedup.dedupClusters]], the component loop EXECUTES at
-  * call time (iterative fixpoint); the posting cache is released once the
-  * pair edges are checkpointed.
+  * call time (iterative fixpoint); the posting checkpoint is released once
+  * the pair edges are checkpointed.
   *
   * Oracled end to end (`q_corpus_clean`): DuckDB recursive CTE over the
   * same filtered+deduped base, hash-compared at the gate.
@@ -202,11 +202,16 @@ object CorpusPipeline {
       .select("doc_id", "text", "lang", "n_chars", "n_tokens")
       .localCheckpoint(true)
     val base = exact.select("doc_id", "text")
-    val sh = Dedup.rarePostings(base, maxDf = 100L).cache()
+    // one tokenize+shingle pass over base: the hot-shingle set, the capped
+    // postings and the per-doc sizes all derive from the checkpointed
+    // stream, whose blocks go as soon as the pair edges are materialized
+    // (a cache() here measured 17 jobs for this step against 8)
+    val posting = Dedup.hashedShingles(base).localCheckpoint(true)
     val pairs =
-      try Dedup.ngramJaccardFromPostings(sh, Dedup.docSizes(base), threshold = 0.12)
+      try Dedup.ngramJaccardFromPostings(Dedup.capPostings(posting, maxDf = 100L),
+          Dedup.postingSizes(posting), threshold = 0.12)
         .select("a_id", "b_id").localCheckpoint(true)
-      finally sh.unpersist()
+      finally graft.Memo.release(posting)
     val keep = Dedup.connectedComponents(pairs, base.select("doc_id"))
       .where(col("id") === col("comp"))
       .select(col("id").as("doc_id"))

@@ -126,21 +126,21 @@ object TextAnalytics {
     * aggregation over the tf rows (distinct (doc, term) by construction —
     * no count-distinct pass), smoothed idf = ln((N+1)/(df+1)) + 1, and
     * top-k terms per doc by a window over the doc (partition bounded by
-    * per-doc VOCABULARY, not corpus). N is a driver-side count — one
-    * columnar count(*) action, same pattern as the IVF centroid sizing.
+    * per-doc VOCABULARY, not corpus). N is the documents table's row
+    * count from its parquet footers (`Tables.rowCount`, no Spark job),
+    * as for the IVF centroid sizing.
     * Rank key rounds the score to 6 dp with a term tiebreak so the
     * ordering is reproducible cross-engine (see the package determinism
     * recipe). */
   def tfidfTopTerms(s: SparkSession, d: String, topK: Int = 3): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val docs = Tables.documents(s, d)
-    // r17: one count job per (session, dir) — shared with any other
-    // doc-count consumer. The tf table is NOT checkpointed although it
-    // feeds both the df rollup and the probe side: materializing the
-    // (doc, term, tf) table costs more than the tokenize+partial-agg it
-    // would save (measured at sf1 — the tokenize receipt in
-    // OPTIMIZATION_r17.md: tokenize is not the bottleneck).
-    val n = graft.Memo.cachedValue(s, s"documents_count:$d")(docs.count())
+    // The tf table is NOT checkpointed although it feeds both the df
+    // rollup and the probe side: materializing the (doc, term, tf) table
+    // costs more than the tokenize+partial-agg it would save (measured at
+    // sf1 — the tokenize receipt in OPTIMIZATION_r17.md: tokenize is not
+    // the bottleneck).
+    val n = Tables.rowCount(s, s"$d/documents.parquet")
     val tf = docs
       .select(col("doc_id"), explode(tokens(col("text"))).as("term"))
       .groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))

@@ -41,7 +41,7 @@ object Pipelines {
     * fix's curve is LINEAR at every notch).
     *
     * Two r15 refinements: (1) the measure is the parquet LOGICAL row
-    * count (a metadata-only count job through the normalized loader),
+    * count (the footer row counts, `Tables.rowCount` — no Spark job),
     * not compressed on-disk bytes — byte sizing flips with the parquet
     * codec/layout near a boundary, making the seeded-fit determinism
     * pins environment-sensitive (ADVICE r15 #3); 7 M rows is the
@@ -56,13 +56,11 @@ object Pipelines {
     * At 1000 executors the cap still yields tens of thousands of
     * fit-frame partitions — parallelism-bound, not formula-bound. */
   private def fitPartitions(s: SparkSession, d: String): Int = {
-    // one count job per (session, dir) — every ML gate calls this, and
-    // each paid its own columnar count(*) before the r17 memo
-    val rows = graft.Memo.cachedValue(s, s"events_count:$d") {
-      val p = new org.apache.hadoop.fs.Path(s"$d/events.parquet")
-      val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(p)) graft.Tables.events(s, d).count() else 0L
-    }
+    val p = new org.apache.hadoop.fs.Path(s"$d/events.parquet")
+    val rows =
+      if (p.getFileSystem(s.sparkContext.hadoopConfiguration).exists(p))
+        graft.Tables.rowCount(s, p.toString)
+      else 0L
     // The cap is a DATA-ONLY constant (ADVICE r16 #1): the r16 form was
     // 32 × defaultParallelism, which re-introduced environment
     // sensitivity above the cap — the fit-frame partition count (and so
@@ -213,13 +211,15 @@ object Pipelines {
     val model = pipeline.fit(train.cache())
     val predictions = model.transform(test).cache()
 
-    def eval(metric: String): Double = new RegressionEvaluator()
+    // the evaluator's own metrics object: one aggregation job serves r2,
+    // rmse and mse, each the value evaluate() would return for it
+    val metrics = new RegressionEvaluator()
       .setLabelCol("next_day_max").setPredictionCol("prediction")
-      .setMetricName(metric).evaluate(predictions)
+      .getMetrics(predictions)
 
     val gbtModel = model.stages.last.asInstanceOf[GBTRegressionModel]
-    RegFit(labeled, train.count(), test.count(),
-      eval("r2"), eval("rmse"), eval("mse"),
+    RegFit(labeled, train.count(), predictions.count(),
+      metrics.r2, metrics.rootMeanSquaredError, metrics.meanSquaredError,
       gbtModel.featureImportances.toArray)
   }
 

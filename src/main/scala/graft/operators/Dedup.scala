@@ -112,12 +112,8 @@ object Dedup {
   private def memoPostings(s: SparkSession, d: String, maxDf: Long): DataFrame =
     graft.Memo.cached(s, s"ngram_postings:$d:$maxDf") {
       // derive from the shared hashed shingle stream (one tokenize+window
-      // pass per session serves this, q_ngram_novelty and the sizes
-      // build) — df-cap semantics identical to rarePostings
-      val posting = memoShingleStream(s, d, 3)
-      val hot = posting.groupBy("sh").agg(count(lit(1)).as("df"))
-        .where(col("df") > maxDf).select("sh")
-      posting.join(broadcast(hot), Seq("sh"), "left_anti")
+      // pass per session serves this and q_ngram_novelty)
+      capPostings(memoShingleStream(s, d, 3), maxDf)
     }
 
   /** The memoized UNCAPPED hashed shingle stream (doc_id, xxhash64(sh))
@@ -129,8 +125,7 @@ object Dedup {
   private[graft] def memoShingleStream(s: SparkSession, d: String,
       n: Int): DataFrame =
     graft.Memo.cached(s, s"ngram_shingle_stream:$d:$n")(
-      shingles(Tables.documents(s, d), n)
-        .select(col("doc_id"), xxhash64(col("sh")).as("sh")))
+      hashedShingles(Tables.documents(s, d), n))
 
   /** Memoized uncapped per-doc shingle counts (Jaccard denominators). */
   private def memoSizes(s: SparkSession, d: String): DataFrame =
@@ -174,8 +169,16 @@ object Dedup {
     * self-join shuffle carries 8 bytes per key and compares longs
     * (VERDICT r2 item 4). Jaccard math stays exact modulo 64-bit hash
     * collisions (~N²/2⁶⁵ — negligible at any realistic shingle count). */
-  def rarePostings(docs: DataFrame, maxDf: Long): DataFrame = {
-    val posting = shingles(docs).select(col("doc_id"), xxhash64(col("sh")).as("sh"))
+  def rarePostings(docs: DataFrame, maxDf: Long): DataFrame =
+    capPostings(hashedShingles(docs), maxDf)
+
+  /** The uncapped (doc_id, xxhash64(shingle)) stream, one row per distinct
+    * n-token shingle of a document — what postings and sizes derive from. */
+  def hashedShingles(docs: DataFrame, n: Int = 3): DataFrame =
+    shingles(docs, n).select(col("doc_id"), xxhash64(col("sh")).as("sh"))
+
+  /** [[rarePostings]] over a prebuilt [[hashedShingles]] stream. */
+  def capPostings(posting: DataFrame, maxDf: Long): DataFrame = {
     val hot = posting.groupBy("sh").agg(count(lit(1)).as("df"))
       .where(col("df") > maxDf).select("sh")
     posting.join(broadcast(hot), Seq("sh"), "left_anti")
@@ -183,8 +186,13 @@ object Dedup {
 
   /** Per-doc distinct-shingle counts (the Jaccard denominators) — counted
     * BEFORE the hot-shingle drop, matching the exact-Jaccard definition. */
-  def docSizes(docs: DataFrame): DataFrame =
-    shingles(docs).groupBy("doc_id").agg(count(lit(1)).as("n_sh"))
+  def docSizes(docs: DataFrame): DataFrame = postingSizes(hashedShingles(docs))
+
+  /** [[docSizes]] over a prebuilt uncapped [[hashedShingles]] stream: the
+    * stream has one row per distinct shingle, so the row count per doc is
+    * the distinct-shingle count. */
+  def postingSizes(posting: DataFrame): DataFrame =
+    posting.groupBy("doc_id").agg(count(lit(1)).as("n_sh"))
 
   /** The pair stage: self-join the NARROW posting list (16 bytes/row — the
     * shuffle ships two longs, and the denominators never ride along), count
@@ -386,34 +394,27 @@ object Dedup {
     * volume as q_decontaminate alone (which scans the shingles twice —
     * the verdict gate is actually cheaper per output row), where the
     * naive compose-two-operators form paid three full shingle scans
-    * plus a wide join of two heavy branches. The eval shingle set is
-    * materialized once (localCheckpoint — eval is benchmark-sized by
-    * contract) because it feeds both the Bloom build and the lazy
-    * exact join. */
+    * plus a wide join of two heavy branches. The eval shingle hashes are
+    * collected to the driver once (eval is benchmark-sized by contract):
+    * the sorted distinct array is the exact side, probed by binary
+    * search, and it builds the Bloom filter — broadcast together, so the
+    * train side needs no join at all. */
   def bloomDecontaminateChecked(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val n = 3; val tau = 0.5; val fpp = 0.01
     val docs = Tables.documents(s, d)
     val train = docs.where(col("doc_id") % 20 =!= 0)
     val eval = docs.where(col("doc_id") % 20 === 0)
-    val evalSh = shingles(eval, n).select(xxhash64(col("sh")).as("sh"))
-      .distinct().localCheckpoint(true)
-    val bloom = evalSh.stat.bloomFilter("sh", math.max(evalSh.count(), 1L), fpp)
-    val bc = s.sparkContext.broadcast(bloom)
-    // explicit broadcast: the checkpointed eval set carries no stats, so
-    // the planner would fall back to a full 40 M-row shuffle+sort (SMJ,
-    // ~5× the map-side probe cost measured at sf10); eval is
-    // benchmark-sized by the decontamination contract, so hinting is
-    // safe at any corpus scale
+    val evalHashes = shingles(eval, n).select(xxhash64(col("sh"))).as[Long]
+      .collect().sorted.distinct
+    val bc = s.sparkContext.broadcast((evalHashes, bloomOf(evalHashes, fpp)))
     shingles(train, n).select(col("doc_id"), xxhash64(col("sh")).as("sh"))
-      .join(broadcast(evalSh.withColumn("exact_hit", lit(1L))), Seq("sh"), "left")
-      .select(col("doc_id"), coalesce(col("exact_hit"), lit(0L)).as("exact_hit"),
-        col("sh"))
-      .as[(Long, Long, Long)]
+      .as[(Long, Long)]
       .mapPartitions { it =>
-        val b = bc.value
-        it.map { case (id, ex, h) =>
-          (id, ex, if (b.mightContainLong(h)) 1L else 0L)
+        val (exact, b) = bc.value
+        it.map { case (id, h) =>
+          (id, if (java.util.Arrays.binarySearch(exact, h) >= 0) 1L else 0L,
+            if (b.mightContainLong(h)) 1L else 0L)
         }
       }
       .toDF("doc_id", "exact_hit", "bloom_hit")
@@ -425,6 +426,16 @@ object Dedup {
       .withColumn("bloom_flagged",
         col("n_bloom").cast("double") / col("n_sh") >= tau)
       .select("doc_id", "n_sh", "n_hit", "contamination", "bloom_flagged")
+  }
+
+  /** The Bloom filter over `distinctHashes` sized for (their count, fpp)
+    * — the same filter `stat.bloomFilter` builds over them as a column. */
+  private[graft] def bloomOf(distinctHashes: Array[Long],
+      fpp: Double): org.apache.spark.util.sketch.BloomFilter = {
+    val b = org.apache.spark.util.sketch.BloomFilter.create(
+      math.max(distinctHashes.length.toLong, 1L), fpp)
+    distinctHashes.foreach(b.putLong)
+    b
   }
 
   /** Duplicated-span detection (the reporting half of exact substring
@@ -1067,10 +1078,12 @@ object Dedup {
     * in |E|; rounds needed = component diameter, and near-dup components
     * are near-cliques (diameter 2-3). `localCheckpoint` after every round
     * truncates the lineage so the plan doesn't grow with iterations.
-    * Convergence = no label changed between rounds (an equi-join diff on
-    * the node-sized label table, `isEmpty` short-circuits on the first
-    * changed row) — type-generic, so node ids can be strings or any
-    * orderable type, unlike a numeric label-sum probe. The node universe
+    * Convergence = no label changed between rounds: each id's previous
+    * label rides through the round's own groupBy(min) as a second
+    * aggregate, and `isEmpty` over the round's checkpoint short-circuits
+    * on the first changed row — no second join against the old labels.
+    * Type-generic, so node ids can be strings or any orderable type,
+    * unlike a numeric label-sum probe. The node universe
     * is nodes ∪ edge endpoints, so a caller passing a partial node list
     * cannot silently violate the propagation invariant. For graphs with
     * continent-sized components (not dedup), switch to the log-round
@@ -1092,17 +1105,18 @@ object Dedup {
       .withColumn("comp", col("id")).localCheckpoint(true)
     var converged = false
     var iter = 0
+    val noLabel = lit(null).cast(labels.schema("comp").dataType)
     while (!converged && iter < maxIter) {
+      // a node's own row carries its previous label as `old`; propagated
+      // rows carry none, so min(old) is exactly the previous label
       val prop = sym.join(labels, sym("__src") === labels("id"))
-        .select(col("__dst").as("id"), col("comp"))
-      val next = labels.unionAll(prop)
-        .groupBy("id").agg(min("comp").as("comp"))
+        .select(col("__dst").as("id"), col("comp"), noLabel.as("old"))
+      val next = labels.select(col("id"), col("comp"), col("comp").as("old"))
+        .unionAll(prop)
+        .groupBy("id").agg(min("comp").as("comp"), min("old").as("old"))
         .localCheckpoint(true)
-      converged = next.as("n")
-        .join(labels.as("p"), col("n.id") === col("p.id"))
-        .where(col("n.comp") =!= col("p.comp"))
-        .isEmpty
-      labels = next
+      converged = next.where(!(col("comp") <=> col("old"))).isEmpty
+      labels = next.select("id", "comp")
       iter += 1
     }
     require(converged, s"connectedComponents did not converge in $maxIter rounds")

@@ -116,9 +116,10 @@ object Similarity {
   // hash is unchanged; bench/Verify attribute the one-time build to the
   // first caller via the [memo] stderr receipts.
 
-  /** Memoized corpus row count — one count job per (session, dir). */
+  /** Corpus row count from the parquet footers ([[Tables.rowCount]]) —
+    * no Spark job, so no memo either. */
   private[graft] def embCount(s: SparkSession, d: String): Long =
-    graft.Memo.cachedValue(s, s"emb_count:$d")(Tables.embeddings(s, d).count())
+    Tables.rowCount(s, s"$d/embeddings.parquet")
 
   /** Memoized seed centroids (the nc lowest vec_ids) for the dir corpus. */
   private def seedCentsD(s: SparkSession, d: String, nc: Int): Array[Cent] =
@@ -483,9 +484,6 @@ object Similarity {
     val s = e.sparkSession
     import s.implicits._
     val vecs = e.select(col("vec_id"), col("embedding")).as[(Long, Array[Float])]
-    val dim = vecs.head()._2.length
-    require(dim % m == 0, s"dim=$dim not divisible by m=$m subspaces")
-    val d = dim / m
     // seedSkip: lowest vec_id eligible as a Lloyd seed. Residual callers
     // pass the coarse-centroid count — vec_ids below it ARE the centroids,
     // whose residuals are exactly zero, and k identical zero seeds make
@@ -494,6 +492,9 @@ object Similarity {
     val seeds = vecs.where(col("vec_id") >= seedSkip)
       .orderBy("vec_id").limit(k).collect().sortBy(_._1).map(_._2)
     require(seeds.length == k, s"need at least k=$k vectors to seed PQ")
+    val dim = seeds.head.length
+    require(dim % m == 0, s"dim=$dim not divisible by m=$m subspaces")
+    val d = dim / m
     var books: Codebooks =
       Array.tabulate(m)(sub => seeds.map(_.slice(sub * d, (sub + 1) * d)))
     val cached = vecs.cache()

@@ -123,7 +123,7 @@ class BatchThreeOpsSpec extends SparkTestBase {
     // families: zs1234/zs1235 (substitution), zs777/zs7777 (insertion)
     val toks = Seq("zs1234", "zs1235", "zs7777", "zs777x", "zs9000",
       "zsab", "zsabc")
-    val dir = java.nio.file.Files.createTempDirectory("fuzzyskew").toString
+    val dir = Scratch.register(java.nio.file.Files.createTempDirectory("fuzzyskew").toString)
     toks.zipWithIndex.map { case (t, i) => (i.toLong, t, "en", "s", t.length.toLong) }
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")

@@ -149,7 +149,7 @@ class CorpusOpsSpec extends SparkTestBase {
   test("BPE merge candidates count adjacent char pairs with multiplicity") {
     // on a hand corpus: "aaab aaab ab" -> pairs: aa,aa,ab ×2 docs... use
     // the table-free oracle logic directly on a tiny planted table
-    val dir = java.nio.file.Files.createTempDirectory("graft_bpe_").toString
+    val dir = Scratch.register(java.nio.file.Files.createTempDirectory("graft_bpe_").toString)
     Seq((1L, "aaab ab", "en", "s", 7L), (2L, "ab", "en", "s", 2L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")

@@ -49,7 +49,7 @@ class LayoutSpec extends SparkTestBase {
   }
 
   test("partitioned write enables partition pruning (PartitionFilters, not data filters)") {
-    val dir = Files.createTempDirectory("graft_part_").toString + "/events_by_type"
+    val dir = Scratch.register(Files.createTempDirectory("graft_part_").toString) + "/events_by_type"
     Layout.writePartitioned(
       Tables.events(spark, sf).select("event_id", "user_id", "event_type", "value"),
       dir, "event_type")
@@ -115,7 +115,7 @@ class LayoutSpec extends SparkTestBase {
     val base = Tables.embeddings(spark, sf)
       .select("vec_id", "embedding").as[(Long, Array[Float])].collect().toMap
     val planted = (base + (100L -> base(0L))).toSeq.toDF("vec_id", "embedding")
-    val dir = Files.createTempDirectory("graft_emb_").toString
+    val dir = Scratch.register(Files.createTempDirectory("graft_emb_").toString)
     planted.write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
     val pairs = Dedup.embeddingNearDup(spark, dir, tau = 0.99).collect()
     assert(pairs.exists(r => r.getAs[Long]("a_id") == 0L && r.getAs[Long]("b_id") == 100L),

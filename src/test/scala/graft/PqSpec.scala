@@ -80,7 +80,7 @@ class PqSpec extends SparkTestBase {
 
   test("ADC top-k recovers the exact cosine neighbors on separable clusters") {
     // plant the clustered corpus as the embeddings table via a temp dir
-    val dir = java.nio.file.Files.createTempDirectory("graft_pq_").toString
+    val dir = Scratch.register(java.nio.file.Files.createTempDirectory("graft_pq_").toString)
     clustered()
       .withColumn("label", lit(0))
       .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
@@ -99,7 +99,7 @@ class PqSpec extends SparkTestBase {
   }
 
   test("IVF-PQ: results come from probed buckets, stay in-cluster, deterministic") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_ivfpq_").toString
+    val dir = Scratch.register(java.nio.file.Files.createTempDirectory("graft_ivfpq_").toString)
     clustered()
       .withColumn("label", lit(0))
       .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")

@@ -17,7 +17,7 @@ import graft.streaming.EventStreams
 class RocksDbStoreSpec extends SparkTestBase {
 
   test("windowed aggregation under the RocksDB provider equals the heap-store result") {
-    val dir = Files.createTempDirectory("graft_rocks_").toString
+    val dir = Scratch.register(Files.createTempDirectory("graft_rocks_").toString)
     Tables.events(spark, sf)
       .select("event_id", "ts", "user_id", "event_type", "value")
       .where(col("user_id") < 20)

@@ -11,7 +11,7 @@ class StreamingMediaSpec extends SparkTestBase {
 
   test("streaming windowed means match the batch resample semantics") {
     // stage a small event file with the streaming schema (epoch-us ts)
-    val dir = Files.createTempDirectory("graft_stream_").toString
+    val dir = Scratch.register(Files.createTempDirectory("graft_stream_").toString)
     Tables.events(spark, sf)
       .select("event_id", "ts", "user_id", "event_type", "value")
       .where(col("user_id") < 5)
@@ -30,7 +30,7 @@ class StreamingMediaSpec extends SparkTestBase {
   }
 
   test("streaming dedup drops duplicate keys within the watermark") {
-    val dir = Files.createTempDirectory("graft_sdedup_").toString
+    val dir = Scratch.register(Files.createTempDirectory("graft_sdedup_").toString)
     val rows = Seq(
       (1L, java.sql.Timestamp.valueOf("2024-01-01 00:00:00"), 7L, "click", 1.0),
       (1L, java.sql.Timestamp.valueOf("2024-01-01 00:00:30"), 7L, "click", 1.0), // dup id
@@ -46,7 +46,7 @@ class StreamingMediaSpec extends SparkTestBase {
   }
 
   test("session_window sessionization merges at exactly the gap, splits just over") {
-    val dir = Files.createTempDirectory("graft_swin_").toString
+    val dir = Scratch.register(Files.createTempDirectory("graft_swin_").toString)
     def ts(s: String) = java.sql.Timestamp.valueOf(s)
     val rows = Seq(
       // user 1: e2 is 1799.5 s after e1 (merge), e3 is EXACTLY 1800 s
@@ -74,7 +74,7 @@ class StreamingMediaSpec extends SparkTestBase {
   }
 
   test("sessionize state machine counts per-user events") {
-    val dir = Files.createTempDirectory("graft_sess_").toString
+    val dir = Scratch.register(Files.createTempDirectory("graft_sess_").toString)
     Tables.events(spark, sf)
       .select("event_id", "ts", "user_id", "event_type", "value")
       .where(col("user_id") < 3)
@@ -95,7 +95,7 @@ class StreamingMediaSpec extends SparkTestBase {
   }
 
   test("append-mode windowed agg drops events older than the watermark") {
-    val base = Files.createTempDirectory("graft_late_").toString
+    val base = Scratch.register(Files.createTempDirectory("graft_late_").toString)
     def ts(s: String) = java.sql.Timestamp.valueOf(s)
     // batch 1: events at 00:00:05 and 01:00:00 -> watermark becomes 00:50
     val b1 = Seq(
@@ -144,7 +144,7 @@ class StreamingMediaSpec extends SparkTestBase {
   test("parquet file sink (production path) persists exactly the finalized windows") {
     // same staged 3-batch scenario as the late-data test, but draining to
     // the PRODUCTION sink: parquet files + checkpoint, append mode
-    val base = Files.createTempDirectory("graft_psink_").toString
+    val base = Scratch.register(Files.createTempDirectory("graft_psink_").toString)
     def ts(s: String) = java.sql.Timestamp.valueOf(s)
     val batches = Seq(
       Seq((1L, ts("2024-01-01 00:00:05"), 1L, "click", 1.0),
@@ -181,7 +181,7 @@ class StreamingMediaSpec extends SparkTestBase {
   }
 
   test("streaming Holt matches the batch fold across multiple micro-batches") {
-    val base = Files.createTempDirectory("graft_sholt_").toString
+    val base = Scratch.register(Files.createTempDirectory("graft_sholt_").toString)
     val ev = Tables.events(spark, sf)
       .select("event_id", "ts", "user_id", "event_type", "value")
       .where(col("user_id") === 1).orderBy("ts")
@@ -321,7 +321,7 @@ class StreamingMediaSpec extends SparkTestBase {
     // user's history at a time boundary into two files, stream with
     // maxFilesPerTrigger=1, and require row-for-row equality with the
     // batch trailing-window operator on the same rows.
-    val base = Files.createTempDirectory("graft_sanom_").toString
+    val base = Scratch.register(Files.createTempDirectory("graft_sanom_").toString)
     val ev = Tables.events(spark, sf)
       .select("event_id", "ts", "user_id", "event_type", "value")
       .where(col("user_id") < 8).orderBy("ts", "event_id")

@@ -80,7 +80,7 @@ class TrainingPrepSpec extends SparkTestBase {
       (i.toLong, java.sql.Timestamp.valueOf(f"2024-01-01 00:${i / 60}%02d:${i % 60}%02d"),
         7L, "t", if (i <= 30) 10.0 else 50.0, "{}")
     }.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
-    val tmp = java.nio.file.Files.createTempDirectory("cp_").toString
+    val tmp = Scratch.register(java.nio.file.Files.createTempDirectory("cp_").toString)
     ev.write.mode("overwrite").parquet(s"$tmp/events.parquet")
     val got = TemporalJoins.changepoint(spark, tmp).collect()
     assert(got.length == 1)

@@ -59,7 +59,7 @@ class UrlCanonicalSpec extends SparkTestBase {
     // synthesized hosts collide) would need the full pipeline; instead pin
     // the window contract through domainCap's public (s, dir) form on a
     // staged corpus: 20 docs, one source, equal-length ties among the top
-    val dir = java.nio.file.Files.createTempDirectory("urlcap").toString
+    val dir = Scratch.register(java.nio.file.Files.createTempDirectory("urlcap").toString)
     val docs = (0L until 20L).map { i =>
       // two length classes: ids 0-9 long (chars 100), ids 10-19 short (50)
       (i, "t", "en", "srcA", if (i < 10) 100L else 50L)
@@ -87,7 +87,7 @@ class UrlCanonicalSpec extends SparkTestBase {
     // same staged corpus shape as above, but cap=10 > every domain's 5
     // docs: all four domains route through the no-sort branch and must
     // report everything kept
-    val dir = java.nio.file.Files.createTempDirectory("urlcapsmall").toString
+    val dir = Scratch.register(java.nio.file.Files.createTempDirectory("urlcapsmall").toString)
     val docs = (0L until 20L).map { i =>
       (i, "t", "en", "srcA", if (i < 10) 100L else 50L)
     }.toDF("doc_id", "text", "lang", "source", "n_chars")
@@ -137,7 +137,7 @@ class UrlCanonicalSpec extends SparkTestBase {
   }
 
   test("urlCanonical keep flag marks exactly one doc per canonical URL") {
-    val dir = java.nio.file.Files.createTempDirectory("urlkeep").toString
+    val dir = Scratch.register(java.nio.file.Files.createTempDirectory("urlkeep").toString)
     // ids 0 and 9240 (lcm(2,3,4,5,6,7,11)=4620 -> same mods for all synth
     // branches) collapse to the same canonical URL under one source
     val docs = Seq(0L, 9240L, 13L).map(i => (i, "t", "en", "srcA", 10L))

@@ -52,6 +52,7 @@ class Xxh64DeviceFuzzSpec extends SparkTestBase {
          |${OracleCtes.xxh64Ctes("src")}
          |SELECT t, h FROM xx_h""".stripMargin
     val sqlFile = java.nio.file.Files.createTempFile("xxh64_fuzz_", ".sql")
+    graft.Scratch.register(sqlFile.toString)
     java.nio.file.Files.writeString(sqlFile, sql)
     val py =
       """import duckdb, base64, sys
@@ -61,6 +62,7 @@ class Xxh64DeviceFuzzSpec extends SparkTestBase {
         |    print(b + "\t" + ("NULL" if h is None else str(h)))
         |""".stripMargin
     val pyFile = java.nio.file.Files.createTempFile("xxh64_fuzz_", ".py")
+    graft.Scratch.register(pyFile.toString)
     java.nio.file.Files.writeString(pyFile, py)
     val proc = new ProcessBuilder("python3", pyFile.toString, sqlFile.toString)
       .redirectErrorStream(false).start()
