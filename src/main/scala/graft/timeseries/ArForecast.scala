@@ -2,7 +2,7 @@ package graft.timeseries
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.{Memo, Tables}
+import graft.Memo
 
 /** AR(p) point forecast for one series (d = differencing order applied). */
 case class ArPoint(series: Long, step: Int, forecast: Double, p: Int, d: Int, n_obs: Int)
@@ -827,7 +827,7 @@ object ArForecast {
   /** The per-series Holt grid kernel of [[holtGridSearch]], shared with
     * [[forecastCv]]: argmin (α, β), its walk-forward MSE, and the
     * full-series (level, trend) state, or None when too short. */
-  private[timeseries] def bestHoltParams(
+  private[graft] def bestHoltParams(
       ys: Array[Double]): Option[(Double, Double, Double, Double, Double)] = {
     val cut = (ys.length * 0.8).toInt
     if (cut < 3 || ys.length - cut < 1) None
@@ -916,23 +916,9 @@ object ArForecast {
     * needs no refit before forecasting. */
   def holtGridSearch(s: SparkSession, d: String, horizon: Int = 3): DataFrame = {
     import s.implicits._
-    import graft.operators.exactAvg
-    // DETERMINISM (round 12): DECIMAL-exact bucket means + the shared
-    // interpolation kernel — the q_holt_forecast input discipline — so
-    // the whole grid search (nine strict left folds + first-argmin) is
-    // bit-reproducible and the DuckDB oracle replays it exactly
-    Tables.events(s, d)
-      .groupBy(col("user_id").as("series"),
-        expr("unix_timestamp(ts) div 1800").as("b"))
-      .agg(exactAvg(col("value")).as("y"))
-      .as[(Long, Long, Double)]
-      .groupByKey(_._1)
+    HoltForecast.denseSeries(s, d)
       .flatMapGroups { (k: Long, it: Iterator[(Long, Long, Double)]) =>
-        val byBucket = it.map(r => r._2 -> r._3).toMap
-        val ys =
-          if (byBucket.isEmpty) Array.empty[Double]
-          else HoltForecast.interpolateBuckets(byBucket).toArray
-        bestHoltParams(ys) match {
+        bestHoltParams(HoltForecast.denseArray(it)) match {
           case None => Iterator.empty
           case Some((bestA, bestB, bestMse, bestLevel, bestTrend)) =>
             (1 to horizon).iterator.map(h =>

@@ -1,7 +1,6 @@
 package graft.timeseries
 
-import java.sql.Timestamp
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
 
@@ -18,7 +17,7 @@ case class ForecastPoint(series: Long, step: Int, forecast: Double,
   * series, resample to 30-min means → linear-interpolate gaps → quantile
   * trim → fit Holt's linear-trend exponential smoothing → h-step forecast.
   *
-  * Design: `Dataset[Reading].groupByKey(_.series).flatMapGroups` keeps the
+  * Design: a per-series `flatMapGroups` (over [[denseSeries]]) keeps the
   * whole kernel inside the executor JVM — no Arrow hop, no Python worker
   * (the boundary SURVEY.md §3 E3 deletes). One shuffle on the series key;
   * per-group state is O(series length after resampling), which is bounded
@@ -186,22 +185,10 @@ object HoltForecast {
     * SQL, so a DuckDB oracle hash-matches the kernel's input end-to-end. */
   def prep(s: SparkSession, d: String, bucketSec: Long = 1800L): DataFrame = {
     import s.implicits._
-    import graft.operators.exactAvg
-    Tables.events(s, d)
-      .groupBy(col("user_id").as("series"),
-        expr(s"unix_timestamp(ts) div $bucketSec").as("b"))
-      .agg(exactAvg(col("value")).as("y"))
-      .as[(Long, Long, Double)]
-      .groupByKey(_._1)
+    denseSeries(s, d, bucketSec)
       .flatMapGroups { (k: Long, it: Iterator[(Long, Long, Double)]) =>
-        val byBucket = it.map(r => r._2 -> r._3).toMap
-        if (byBucket.isEmpty) Iterator.empty
-        else {
-          val lo = byBucket.keys.min
-          interpolateBuckets(byBucket).iterator.zipWithIndex.map {
-            case (v, i) => (k, (lo + i) * bucketSec, v)
-          }
-        }
+        val (lo, ys) = denseBuckets(it)
+        ys.iterator.zipWithIndex.map { case (v, i) => (k, (lo + i) * bucketSec, v) }
       }
       .toDF("series", "bucket", "y")
   }
@@ -254,30 +241,19 @@ object HoltForecast {
     * forecast over the 30-min resampled+interpolated grid, DAILY season
     * (m = 48 buckets), horizon steps. No quantile trim (trimming deletes
     * grid points and would de-align the seasonal index). Same
-    * groupByKey/flatMapGroups shape as [[forecast]]: one shuffle on the
-    * series key, O(buckets) per-group state; series shorter than two
-    * seasons emit nothing. No oracle (float folds — the q_holt_forecast
-    * class); HwSeasonalSpec pins exact-seasonal recovery, determinism,
-    * and the seasonal-beats-Holt MSE ordering on planted data. */
+    * [[denseSeries]] input as [[forecast]]: one shuffle on the series
+    * key, O(buckets) per-group state; series shorter than two seasons
+    * emit nothing. The DuckDB oracle replays the triple-smoothing fold
+    * with a LIST-carrying recursive CTE; HwSeasonalSpec pins
+    * exact-seasonal recovery, determinism, and the seasonal-beats-Holt
+    * MSE ordering on planted data. */
   def hwForecast(s: SparkSession, d: String, alpha: Double = 0.5,
       beta: Double = 0.3, gamma: Double = 0.3, m: Int = 48,
       horizon: Int = 6, bucketSec: Long = 1800L): DataFrame = {
     import s.implicits._
-    import graft.operators.exactAvg
-    // DETERMINISM (round 12): same exactAvg + interpolateBuckets input
-    // path as [[forecast]], so the triple-smoothing fold is
-    // bit-reproducible and the DuckDB oracle replays it with a
-    // LIST-carrying recursive CTE (`q_hw_seasonal` is hash-checked)
-    Tables.events(s, d)
-      .groupBy(col("user_id").as("series"),
-        expr(s"unix_timestamp(ts) div $bucketSec").as("b"))
-      .agg(exactAvg(col("value")).as("y"))
-      .as[(Long, Long, Double)]
-      .groupByKey(_._1)
+    denseSeries(s, d, bucketSec)
       .flatMapGroups { (k: Long, it: Iterator[(Long, Long, Double)]) =>
-        val byBucket = it.map(r => r._2 -> r._3).toMap
-        val ys = if (byBucket.isEmpty) IndexedSeq.empty[Double]
-                 else interpolateBuckets(byBucket)
+        val ys = scala.collection.immutable.ArraySeq.unsafeWrapArray(denseArray(it))
         if (ys.length < 2 * m) Iterator.empty
         else {
           val (level, trend, seas, phase) = hwFit(ys, alpha, beta, gamma, m)
@@ -291,65 +267,72 @@ object HoltForecast {
   }
 
   /** The deterministic dense-series input every whole-table forecast
-    * entry consumes (round 12): per-(series = user, 30-min bucket)
-    * DECIMAL-exact means (order-independent, unlike a float sum in
-    * iterator order) grouped by series — the q_holt_prep path. Pair
-    * with [[denseArray]] inside flatMapGroups. */
+    * entry consumes (the q_holt_prep path): per-(series = user, 30-min
+    * bucket) DECIMAL-exact means grouped by series. Pair with
+    * [[denseArray]] inside flatMapGroups.
+    *
+    * DETERMINISM: the means come from the order-independent DECIMAL
+    * `exactAvg`, not a float accumulation in iterator order, and every
+    * kernel downstream ([[interpolateBuckets]] direct lerp, then the
+    * entry's own strict left folds) is a fixed sequence of IEEE ops on
+    * them — so each entry is bit-reproducible, and the DuckDB oracles of
+    * q_holt_prep, q_holt_forecast, q_hw_seasonal, q_ar_forecast and
+    * q_holt_gridsearch replay it exactly.
+    *
+    * ONE exchange: the pruned rows are hash-partitioned by series first,
+    * which satisfies both the (series, bucket) mean and the per-series
+    * group, so there is no partial aggregate before the shuffle and no
+    * second shuffle (nor an `AppendColumns` key deserialisation, as with
+    * a typed `groupByKey`). A partial aggregate only pays when buckets
+    * hold several readings: its DECIMAL sum buffers make each shuffled
+    * row wider than a raw (series, bucket, value) row, and break-even is
+    * about 2.5 readings per (series, bucket). The test data holds 1.02
+    * per group at sf0.01 and sf0.1, and the perfbench sensor input 1.15
+    * (seed 1: 100,000 rows in 86,731 groups), where the partial aggregate
+    * shipped 1.35 MB against 1.24 MB of raw rows and the second shuffle
+    * another 1.39 MB; `ScaleUp` keeps group sizes constant. */
   def denseSeries(s: SparkSession, d: String, bucketSec: Long = 1800L)
       : org.apache.spark.sql.KeyValueGroupedDataset[Long, (Long, Long, Double)] = {
     import s.implicits._
     import graft.operators.exactAvg
     Tables.events(s, d)
-      .groupBy(col("user_id").as("series"),
-        expr(s"unix_timestamp(ts) div $bucketSec").as("b"))
+      .select(col("user_id").as("series"),
+        expr(s"unix_timestamp(ts) div $bucketSec").as("b"), col("value"))
+      .repartition(col("series"))
+      .groupBy("series", "b")
       .agg(exactAvg(col("value")).as("y"))
-      .as[(Long, Long, Double)]
-      .groupByKey(_._1)
+      .groupBy("series")
+      .as[Long, (Long, Long, Double)]
   }
 
   /** Densify one [[denseSeries]] group: bucket means → the shared
     * [[interpolateBuckets]] direct-lerp fill. */
-  def denseArray(it: Iterator[(Long, Long, Double)]): Array[Double] = {
+  def denseArray(it: Iterator[(Long, Long, Double)]): Array[Double] = denseBuckets(it)._2
+
+  /** [[denseArray]] with the group's first bucket index (0 when empty). */
+  private def denseBuckets(it: Iterator[(Long, Long, Double)]): (Long, Array[Double]) = {
     val byBucket = it.map(r => r._2 -> r._3).toMap
-    if (byBucket.isEmpty) Array.empty[Double]
-    else interpolateBuckets(byBucket).toArray
+    if (byBucket.isEmpty) (0L, Array.empty[Double])
+    else (byBucket.keys.min, interpolateBuckets(byBucket).toArray)
   }
 
   /** Whole-table entry: events → per-user Holt forecast, horizon steps of
-    * 30 minutes each.
-    *
-    * DETERMINISM (round 12, the q_holt_prep path extended through the
-    * kernel): bucket means come from the order-independent DECIMAL
-    * exactAvg — not a float accumulation in iterator order — and
-    * everything downstream ([[interpolateBuckets]] direct lerp,
-    * [[quantileTrim]] type-7 lerp, the [[holtFit]] strict left fold) is
-    * a fixed sequence of IEEE ops on those deterministic inputs, so the
-    * whole forecast is bit-reproducible and the DuckDB oracle
-    * (`q_holt_forecast`) replays the identical recurrence with a
-    * recursive CTE and hash-matches. The raw-iterator kernel
+    * 30 minutes each, over the [[denseSeries]] input: [[quantileTrim]]
+    * (type-7 lerp) then the [[holtFit]] strict left fold, which the
+    * `q_holt_forecast` oracle replays. The raw-iterator kernel
     * ([[forecastGroup]]/[[resampleArray]]) remains for the streaming
     * form, where per-batch arrival order is the stream's own. */
   def forecast(s: SparkSession, d: String,
       alpha: Double = 0.5, beta: Double = 0.3, horizon: Int = 6): DataFrame = {
     import s.implicits._
-    import graft.operators.exactAvg
-    Tables.events(s, d)
-      .groupBy(col("user_id").as("series"),
-        expr("unix_timestamp(ts) div 1800").as("b"))
-      .agg(exactAvg(col("value")).as("y"))
-      .as[(Long, Long, Double)]
-      .groupByKey(_._1)
+    denseSeries(s, d)
       .flatMapGroups { (k: Long, it: Iterator[(Long, Long, Double)]) =>
-        val byBucket = it.map(r => r._2 -> r._3).toMap
-        if (byBucket.isEmpty) Iterator.empty
+        val ys = quantileTrim(scala.collection.immutable.ArraySeq.unsafeWrapArray(denseArray(it)))
+        if (ys.isEmpty) Iterator.empty
         else {
-          val ys = quantileTrim(interpolateBuckets(byBucket))
-          if (ys.isEmpty) Iterator.empty
-          else {
-            val (level, trend) = holtFit(ys, alpha, beta)
-            (1 to horizon).iterator.map(h =>
-              ForecastPoint(k, h, level + h * trend, level, trend, ys.length))
-          }
+          val (level, trend) = holtFit(ys, alpha, beta)
+          (1 to horizon).iterator.map(h =>
+            ForecastPoint(k, h, level + h * trend, level, trend, ys.length))
         }
       }
       .toDF()
