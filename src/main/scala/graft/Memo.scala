@@ -20,6 +20,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * (session, key), materializes the result via `localCheckpoint(eager)`,
   * and returns the checkpointed frame on every later call. Results are
   * identical to a fresh compute (all builders here are deterministic).
+  * The checkpointed frame does NOT keep its build's output partitioning:
+  * under AQE it reports `UnknownPartitioning`, so a consumer that groups
+  * or joins it by the build's key shuffles it again. A keyed intermediate
+  * is therefore memoized one row per key (the dense series table holds
+  * each series' whole array in one row), so its consumers are per-row
+  * maps with no exchange.
   *
   * Lifecycle: entries of STOPPED sessions are pruned on every public
   * call (their blocks died with the context; a WeakHashMap would not work

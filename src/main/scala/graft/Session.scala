@@ -21,6 +21,12 @@ object Session {
       // ScaleUp fixture writes 1 MB row groups so map-side text work
       // parallelizes the way a many-split 100 TB table would)
       .config("spark.sql.files.maxPartitionBytes", "1m")
+      // generated-class cache (a static conf, so set before getOrCreate):
+      // one sf0.01 Verify of every gate compiles 3,453 distinct classes,
+      // and Spark's default of 100 entries made it compile 5,261; 6000 is
+      // that count with more than 1.5x headroom, since the cache splits
+      // its entries over 4 unevenly filled segments
+      .config("spark.sql.codegen.cache.maxEntries", "6000")
       .config("spark.sql.warehouse.dir", Scratch.dir("warehouse"))
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

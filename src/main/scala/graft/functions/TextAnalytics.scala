@@ -129,6 +129,11 @@ object TextAnalytics {
     * per-doc VOCABULARY, not corpus). N is the documents table's row
     * count from its parquet footers (`Tables.rowCount`, no Spark job),
     * as for the IVF centroid sizing.
+    * The documents are clustered by `doc_id` once, before tokenizing:
+    * the tf aggregate, the top-k window and df's input then all run
+    * inside that one exchange, whose (doc_id, text) rows are smaller than
+    * the (doc, term, count) rows it replaces, and the tf and df branches
+    * reuse it. Only df's per-term rollup shuffles again.
     * Rank key rounds the score to 6 dp with a term tiebreak so the
     * ordering is reproducible cross-engine (see the package determinism
     * recipe). */
@@ -142,6 +147,8 @@ object TextAnalytics {
     // the bottleneck).
     val n = Tables.rowCount(s, s"$d/documents.parquet")
     val tf = docs
+      .select(col("doc_id"), col("text"))
+      .repartition(col("doc_id"))
       .select(col("doc_id"), explode(tokens(col("text"))).as("term"))
       .groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
     val dfreq = tf.groupBy("term").agg(count(lit(1)).as("df"))

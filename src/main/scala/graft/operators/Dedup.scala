@@ -1245,6 +1245,10 @@ object Dedup {
     * double conversion is exact). */
   private val PrScale = 1000000000000000L
 
+  /** Rounds [[pagerank]] chains into one lazy plan before it checkpoints
+    * the ranks; the gate's 5 rounds stay one plan. */
+  private val PrRoundsPerPlan = 10
+
   /** Iterative PageRank on an UNDIRECTED edge list (first two columns =
     * endpoints; symmetrized internally), nodes from `nodes`' first
     * column. rank_{t+1}(v) = (1−d)/N + d·Σ_{u→v} rank_t(u)/deg(u) — the
@@ -1258,13 +1262,15 @@ object Dedup {
     * standard distributed PageRank shuffle shape; at 100 TB the edge
     * list would be pre-bucketed by src so the per-round join is
     * exchange-free on the big side. The fixed-iteration loop builds ONE
-    * lazy plan (depth ∝ iters — callers wanting 100s of rounds should
-    * checkpoint per round like [[connectedComponents]], whose round
-    * count is data-dependent): within that plan the edge list's shuffle
-    * is planned once and reused every round (ReuseExchange), where the
-    * r17 eager-per-round form re-shuffled it each iteration because the
-    * round-boundary checkpoints erase partitioning metadata. Degrees and
-    * the symmetric edges build once and checkpoint.
+    * lazy plan per [[PrRoundsPerPlan]] rounds, cut by a localCheckpoint
+    * after each such span: a 60-round plan in one piece deserialized
+    * into a StackOverflowError in the executor thread (PagerankSpec's
+    * star fixture, 1.27 MB task binary). Within each plan the edge
+    * list's shuffle is planned once and reused every round
+    * (ReuseExchange), where the r17 eager-per-round form re-shuffled it
+    * each iteration because the round-boundary checkpoints erase
+    * partitioning metadata. Degrees and the symmetric edges build once
+    * and checkpoint.
     *
     * Ranks are FIXED-POINT: integer units of 1/[[PrScale]], with every
     * per-iteration step (u div deg contributions, an integer SUM, the
@@ -1302,7 +1308,8 @@ object Dedup {
     //     intermediate (guide §1.2 step 1: don't re-do per-edge what is
     //     per-node);
     //  2. the fixed-depth loop is built as ONE lazy plan (no per-round
-    //     localCheckpoint): the checkpointed sym/deg/ids leaves lose
+    //     localCheckpoint; one per PrRoundsPerPlan rounds only bounds
+    //     the plan's depth): the checkpointed sym/deg/ids leaves lose
     //     their partitioning metadata (LogicalRDD scans report
     //     UnknownPartitioning), so an eager per-round plan re-shuffled
     //     the edge list EVERY round, while in a single plan the
@@ -1318,7 +1325,8 @@ object Dedup {
     // Join strategy never changes the emitted integers: the sum is an
     // exact long fold, order-free by construction.
     var ranks = ids.withColumn("u", lit(PrScale / n))
-    for (_ <- 1 to iters) {
+    for (i <- 1 to iters) {
+      if (i > 1 && (i - 1) % PrRoundsPerPlan == 0) ranks = ranks.localCheckpoint(true)
       val perSrc = ranks
         .join(deg.hint("shuffle_hash"), ranks("id") === deg("src"))
         .select(ranks("id").as("src"), expr("u div deg").as("c"))

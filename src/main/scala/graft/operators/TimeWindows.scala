@@ -46,16 +46,29 @@ object TimeWindows {
 
   /** W3+A7 — 30-minute tumbling-window resample with mean, per series
     * (cf. pandas `resample('30T').mean()`,
-    * `spark_pandas_timeseries_forecast.py:34-35`). `window()` is a plain
-    * projection (no shuffle beyond the groupBy). */
-  def resample30m(s: SparkSession, d: String): DataFrame =
+    * `spark_pandas_timeseries_forecast.py:34-35`). One exchange: the
+    * pruned (user_id, bucket start, value) rows are hash-partitioned by
+    * series, which also satisfies the (user_id, bucket) groupBy, so no
+    * partial aggregate ships a window struct and DECIMAL sum buffers per
+    * bucket (at 1.15 readings per bucket the raw rows are the smaller
+    * shuffle, as for [[graft.timeseries.HoltForecast.denseTable]]). The
+    * bucket start is the floor of the epoch micros to 30 minutes, which
+    * is `window(ts, "30 minutes").start` also before 1970, where the
+    * `unix_timestamp(ts) div 1800` key of the forecasts truncates toward
+    * zero; rows with a null `ts` are dropped, as `window()` drops them. */
+  def resample30m(s: SparkSession, d: String): DataFrame = {
+    val us = expr("unix_micros(ts)")
     Tables.events(s, d)
-      .groupBy(col("user_id"), window(col("ts"), "30 minutes"))
+      .where(col("ts").isNotNull)
+      .select(col("user_id"), (us - pmod(us, lit(1800000000L))).as("b"), col("value"))
+      .repartition(col("user_id"))
+      .groupBy("user_id", "b")
       .agg(exactAvg(col("value")).as("avg_value"),
         count(lit(1)).as("n"),
         max("value").as("max_value"))
-      .select(col("user_id"), col("window.start").as("bucket"),
+      .select(col("user_id"), timestamp_micros(col("b")).as("bucket"),
         col("avg_value"), col("n"), col("max_value"))
+  }
 
   /** Hourly per-series means joined onto a dense per-series hour spine
     * (generated with `sequence()` — the distributed analog of a pandas

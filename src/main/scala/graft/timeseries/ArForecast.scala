@@ -32,8 +32,9 @@ case class ForecastCv(series: Long, n_buckets: Int, holt_mse: Double,
   * — fit on a train prefix, score MSE on a validation suffix, keep the
   * argmin — is implemented faithfully, distributed per series.
   *
-  * All pure JVM math inside `flatMapGroups` — same execution shape as
-  * HoltForecast (one shuffle on the series key, no Python/Arrow hop).
+  * All pure JVM math in a per-series `flatMap` over
+  * [[HoltForecast.denseTable]] — same execution shape as HoltForecast (no
+  * shuffle once the shared table exists, no Python/Arrow hop).
   */
 object ArForecast {
 
@@ -164,7 +165,7 @@ object ArForecast {
     * take its residuals as proxies for the innovations; (2) OLS-regress
     * x_t on [x_{t-1..t-p}, ê_{t-1..t-q}]. Published textbook method
     * (Brockwell & Davis §8.3); no optimizer, one pass to build the
-    * (p+q)² normal equations — the shape that runs inside flatMapGroups
+    * (p+q)² normal equations — the shape that runs inside a per-series flatMap
     * at any series count. Returns (mean, φ[p], θ[q]). q = 0 falls back
     * to plain Yule-Walker (identical to the AR path). */
   def hannanRissanen(ys: IndexedSeq[Double], p: Int, q: Int): (Double, Array[Double], Array[Double]) = {
@@ -181,7 +182,7 @@ object ArForecast {
   }
 
   /** Stage-1 long-AR order for Hannan-Rissanen. */
-  private[timeseries] def hrLongOrder(p: Int, q: Int, n: Int): Int =
+  private[graft] def hrLongOrder(p: Int, q: Int, n: Int): Int =
     math.min(math.max(2 * (p + q), 10), (n - 1) / 4)
 
   /** Innovations proxy: AR(m) one-step residuals of the centered series
@@ -314,9 +315,8 @@ object ArForecast {
       pGrid: Seq[Int] = Seq(4, 6, 8, 10), dGrid: Seq[Int] = Seq(1, 2),
       qGrid: Seq[Int] = Seq(0, 1, 2)): DataFrame = {
     import s.implicits._
-    HoltForecast.denseSeries(s, d)
-      .flatMapGroups { (k: Long, it: Iterator[(Long, Long, Double)]) =>
-        val raw = HoltForecast.denseArray(it)
+    HoltForecast.denseTable(s, d)
+      .flatMap { case (k, _, raw) =>
         val combos = arimaGridMses(raw, pGrid, dGrid, qGrid)
         if (combos.isEmpty) Iterator.empty // below the grid length rule
         else firstArgmin(combos) match {
@@ -376,9 +376,8 @@ object ArForecast {
     * cannot be replayed within the driver's oracle budget. */
   def armaHrFixed(s: SparkSession, d: String, p: Int = 2, q: Int = 1): DataFrame = {
     import s.implicits._
-    HoltForecast.denseSeries(s, d)
-      .flatMapGroups { (k: Long, it: Iterator[(Long, Long, Double)]) =>
-        val raw = HoltForecast.denseArray(it)
+    HoltForecast.denseTable(s, d)
+      .flatMap { case (k, _, raw) =>
         if (raw.length < 2) Iterator.empty
         else {
           val cur = Array.tabulate(raw.length - 1)(j => raw(j + 1) - raw(j))
@@ -467,10 +466,9 @@ object ArForecast {
   def forecast(s: SparkSession, d: String, p: Int = 4, horizon: Int = 6,
       diffOrders: Seq[Int] = Seq(0, 1)): DataFrame = {
     import s.implicits._
-    HoltForecast.denseSeries(s, d)
-      .flatMapGroups { (k: Long, it: Iterator[(Long, Long, Double)]) =>
-        val ys = scala.collection.immutable.ArraySeq.unsafeWrapArray(
-          HoltForecast.denseArray(it))
+    HoltForecast.denseTable(s, d)
+      .flatMap { case (k, _, raw) =>
+        val ys = scala.collection.immutable.ArraySeq.unsafeWrapArray(raw)
         diffOrders.iterator
           .filter(dd => ys.length > p + 1 + dd) // need > p+1 points AFTER differencing
           .flatMap { dd =>
@@ -492,15 +490,14 @@ object ArForecast {
     * cancel), and the validation count is identical across d, so MSEs
     * are comparable across the whole grid. The winner forecasts
     * `horizon` steps, integrated back to the original scale. Same
-    * single-shuffle flatMapGroups shape as the Holt search; grid work is
+    * per-series flatMap over the dense table as the Holt search; grid work is
     * a tight JVM loop per series. */
   def arimaGridSearch(s: SparkSession, d: String,
       pGrid: Seq[Int] = Seq(4, 6, 8, 10), dGrid: Seq[Int] = Seq(1, 2),
       qGrid: Seq[Int] = Seq(0, 1, 2), horizon: Int = 3): DataFrame = {
     import s.implicits._
-    HoltForecast.denseSeries(s, d)
-      .flatMapGroups { (k: Long, it: Iterator[(Long, Long, Double)]) =>
-        val raw = HoltForecast.denseArray(it)
+    HoltForecast.denseTable(s, d)
+      .flatMap { case (k, _, raw) =>
         bestArimaOrders(raw, pGrid, dGrid, qGrid) match {
           case None => Iterator.empty
           case Some((bestP, bestD, bestQ, bestMse)) =>
@@ -522,7 +519,7 @@ object ArForecast {
     * [[arimaGridSearchVerdict]] can re-derive the first-argmin from the
     * full enumeration; empty when the series is too short for the
     * grid. */
-  private[timeseries] def arimaGridMses(raw: Array[Double], pGrid: Seq[Int],
+  private[graft] def arimaGridMses(raw: Array[Double], pGrid: Seq[Int],
       dGrid: Seq[Int], qGrid: Seq[Int]): Seq[(Int, Int, Int, Double)] = {
     val cut0 = (raw.length * 0.8).toInt
     val need = pGrid.max + dGrid.max + qGrid.max + 2
@@ -583,7 +580,7 @@ object ArForecast {
     * walk-forward MSE, or None when the series is too short for the
     * grid. Strict < keeps the FIRST argmin in grid order (matches the
     * reference's sequential best update); NaN combos are skipped. */
-  private[timeseries] def bestArimaOrders(raw: Array[Double], pGrid: Seq[Int],
+  private[graft] def bestArimaOrders(raw: Array[Double], pGrid: Seq[Int],
       dGrid: Seq[Int], qGrid: Seq[Int]): Option[(Int, Int, Int, Double)] =
     firstArgmin(arimaGridMses(raw, pGrid, dGrid, qGrid))
 
@@ -593,7 +590,7 @@ object ArForecast {
     * it to an already-computed enumeration rather than re-running the
     * grid — the r15 sf1 bench measured the double enumeration at 2.2×
     * the raw gate). */
-  private def firstArgmin(
+  private[graft] def firstArgmin(
       combos: Seq[(Int, Int, Int, Double)]): Option[(Int, Int, Int, Double)] = {
     var bestP = -1; var bestD = 0; var bestQ = 0
     var bestMse = Double.PositiveInfinity
@@ -626,14 +623,13 @@ object ArForecast {
     * r15 #1). [[forecastCv]] keeps its own independent per-series dual
     * enumeration; that independence is exactly what the lockstep join
     * then checks against this table. */
-  private def arimaFamily(s: SparkSession, d: String, pGrid: Seq[Int],
+  private[graft] def arimaFamily(s: SparkSession, d: String, pGrid: Seq[Int],
       dGrid: Seq[Int], qGrid: Seq[Int], horizon: Int): DataFrame =
     Memo.cached(s, s"arima_family:$d:p=${pGrid.mkString("_")}" +
         s":d=${dGrid.mkString("_")}:q=${qGrid.mkString("_")}:h=$horizon") {
       import s.implicits._
-      HoltForecast.denseSeries(s, d)
-        .flatMapGroups { (k: Long, it: Iterator[(Long, Long, Double)]) =>
-          val raw = HoltForecast.denseArray(it)
+      HoltForecast.denseTable(s, d)
+        .flatMap { case (k, _, raw) =>
           val combos = arimaGridMses(raw, pGrid, dGrid, qGrid)
           if (combos.isEmpty) Iterator.empty // below the grid length rule
           else firstArgmin(combos) match {
@@ -853,11 +849,11 @@ object ArForecast {
     * `/root/reference/pandas_timeseries_forecast.py:75-91` — a grid
     * search selecting by validation MSE; this extends the same argmin
     * across model FAMILIES, the standard "which model for which
-    * series" routing step before a forecast fleet is deployed). One
-    * shuffle on the series key; per series, both grids run over the
+    * series" routing step before a forecast fleet is deployed). Per
+    * series of [[HoltForecast.denseTable]], both grids run over the
     * SAME resampled array and 80/20 split, so the MSEs are directly
     * comparable; emits the winner and the Holt/ARIMA MSE ratio. All
-    * pure JVM math in one flatMapGroups — series where either family
+    * pure JVM math in one per-series flatMap — series where either family
     * cannot fit (too short for the deepest grid order) are dropped,
     * keeping the verdict well-defined. Deterministic (both kernels are
     * fixed-order argmins over fixed grids); no DuckDB oracle — the
@@ -870,10 +866,8 @@ object ArForecast {
     import s.implicits._
     // same deterministic dense input as BOTH family gates it must match
     // bit for bit (ForecastCvSpec lockstep contract)
-    HoltForecast.denseSeries(s, d)
-      .flatMapGroups { (k: Long, it: Iterator[(Long, Long, Double)]) =>
-        cvGroup(k, HoltForecast.denseArray(it), pGrid, dGrid, qGrid)
-      }
+    HoltForecast.denseTable(s, d)
+      .flatMap { case (k, _, raw) => cvGroup(k, raw, pGrid, dGrid, qGrid) }
       .toDF()
   }
 
@@ -893,7 +887,7 @@ object ArForecast {
       .toDF()
   }
 
-  private def cvGroup(k: Long, raw: Array[Double], pGrid: Seq[Int],
+  private[graft] def cvGroup(k: Long, raw: Array[Double], pGrid: Seq[Int],
       dGrid: Seq[Int], qGrid: Seq[Int]): Iterator[ForecastCv] =
     (bestHoltParams(raw), bestArimaOrders(raw, pGrid, dGrid, qGrid)) match {
       case (Some((_, _, hMse, _, _)), Some((_, _, _, aMse))) =>
@@ -916,9 +910,9 @@ object ArForecast {
     * needs no refit before forecasting. */
   def holtGridSearch(s: SparkSession, d: String, horizon: Int = 3): DataFrame = {
     import s.implicits._
-    HoltForecast.denseSeries(s, d)
-      .flatMapGroups { (k: Long, it: Iterator[(Long, Long, Double)]) =>
-        bestHoltParams(HoltForecast.denseArray(it)) match {
+    HoltForecast.denseTable(s, d)
+      .flatMap { case (k, _, raw) =>
+        bestHoltParams(raw) match {
           case None => Iterator.empty
           case Some((bestA, bestB, bestMse, bestLevel, bestTrend)) =>
             (1 to horizon).iterator.map(h =>

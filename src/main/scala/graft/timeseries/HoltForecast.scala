@@ -1,8 +1,10 @@
 package graft.timeseries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.collection.immutable.ArraySeq
+
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Memo, Tables}
 
 /** One raw observation of one series. */
 case class Reading(series: Long, epochSec: Long, value: Double)
@@ -17,11 +19,14 @@ case class ForecastPoint(series: Long, step: Int, forecast: Double,
   * series, resample to 30-min means → linear-interpolate gaps → quantile
   * trim → fit Holt's linear-trend exponential smoothing → h-step forecast.
   *
-  * Design: a per-series `flatMapGroups` (over [[denseSeries]]) keeps the
-  * whole kernel inside the executor JVM — no Arrow hop, no Python worker
-  * (the boundary SURVEY.md §3 E3 deletes). One shuffle on the series key;
-  * per-group state is O(series length after resampling), which is bounded
-  * by the time range, not the corpus. Two reference bugs fixed (SURVEY §8):
+  * Design: the paper resamples each series once and fits on that series,
+  * so the 30-min dense series is built once per (session, dir) as
+  * [[denseTable]] — one shuffle on the series key, one row per series —
+  * and every whole-table entry is a per-row `flatMap` over it that keeps
+  * the whole kernel inside the executor JVM: no Arrow hop, no Python
+  * worker (the boundary SURVEY.md §3 E3 deletes), and no further shuffle.
+  * Per-series state is O(series length after resampling), which is
+  * bounded by the time range, not the corpus. Two reference bugs fixed (SURVEY §8):
   * grouping is by SERIES (the reference grouped by ('datetime','O2') —
   * near-per-row groups), and the forecast returns one array, not three.
   */
@@ -166,7 +171,7 @@ object HoltForecast {
     val dense = resampleArray(readings.map(r => (r.epochSec, r.value)), bucketSec)
     if (dense.isEmpty) Iterator.empty
     else {
-      val ys = quantileTrim(scala.collection.immutable.ArraySeq.unsafeWrapArray(dense))
+      val ys = quantileTrim(ArraySeq.unsafeWrapArray(dense))
       if (ys.isEmpty) Iterator.empty
       else {
         val (level, trend) = holtFit(ys, alpha, beta)
@@ -183,12 +188,11 @@ object HoltForecast {
     * consume, emitted as one dense row per (series, bucket). Both the
     * bucket means and the direct-lerp fill are bitwise-reproducible in
     * SQL, so a DuckDB oracle hash-matches the kernel's input end-to-end. */
-  def prep(s: SparkSession, d: String, bucketSec: Long = 1800L): DataFrame = {
+  def prep(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    denseSeries(s, d, bucketSec)
-      .flatMapGroups { (k: Long, it: Iterator[(Long, Long, Double)]) =>
-        val (lo, ys) = denseBuckets(it)
-        ys.iterator.zipWithIndex.map { case (v, i) => (k, (lo + i) * bucketSec, v) }
+    denseTable(s, d)
+      .flatMap { case (k, lo, ys) =>
+        ys.iterator.zipWithIndex.map { case (v, i) => (k, (lo + i) * 1800L, v) }
       }
       .toDF("series", "bucket", "y")
   }
@@ -241,19 +245,19 @@ object HoltForecast {
     * forecast over the 30-min resampled+interpolated grid, DAILY season
     * (m = 48 buckets), horizon steps. No quantile trim (trimming deletes
     * grid points and would de-align the seasonal index). Same
-    * [[denseSeries]] input as [[forecast]]: one shuffle on the series
-    * key, O(buckets) per-group state; series shorter than two seasons
+    * [[denseTable]] input as [[forecast]]: a per-series `flatMap`,
+    * O(buckets) per-series state; series shorter than two seasons
     * emit nothing. The DuckDB oracle replays the triple-smoothing fold
     * with a LIST-carrying recursive CTE; HwSeasonalSpec pins
     * exact-seasonal recovery, determinism, and the seasonal-beats-Holt
     * MSE ordering on planted data. */
   def hwForecast(s: SparkSession, d: String, alpha: Double = 0.5,
       beta: Double = 0.3, gamma: Double = 0.3, m: Int = 48,
-      horizon: Int = 6, bucketSec: Long = 1800L): DataFrame = {
+      horizon: Int = 6): DataFrame = {
     import s.implicits._
-    denseSeries(s, d, bucketSec)
-      .flatMapGroups { (k: Long, it: Iterator[(Long, Long, Double)]) =>
-        val ys = scala.collection.immutable.ArraySeq.unsafeWrapArray(denseArray(it))
+    denseTable(s, d)
+      .flatMap { case (k, _, dense) =>
+        val ys = ArraySeq.unsafeWrapArray(dense)
         if (ys.length < 2 * m) Iterator.empty
         else {
           val (level, trend, seas, phase) = hwFit(ys, alpha, beta, gamma, m)
@@ -266,58 +270,62 @@ object HoltForecast {
       .toDF("series", "step", "forecast", "level", "trend", "seasonal", "n_obs")
   }
 
-  /** The deterministic dense-series input every whole-table forecast
-    * entry consumes (the q_holt_prep path): per-(series = user, 30-min
-    * bucket) DECIMAL-exact means grouped by series. Pair with
-    * [[denseArray]] inside flatMapGroups.
+  /** The deterministic dense-series input of every whole-table forecast
+    * entry (the q_holt_prep path), one row per series: `(series, lo, ys)`,
+    * where `ys` is the series' 30-min bucket means from bucket `lo` on,
+    * gaps filled by the shared [[interpolateBuckets]] direct lerp. Built
+    * once per (session, dir) and memoized ([[graft.Memo]]), so the entries
+    * after the first read it with no exchange: each is a per-row `flatMap`.
+    * A memoized frame loses its output partitioning, so the table holds
+    * one row per series, not one per (series, bucket): keyed rows would be
+    * shuffled again by every consumer.
     *
     * DETERMINISM: the means come from the order-independent DECIMAL
     * `exactAvg`, not a float accumulation in iterator order, and every
-    * kernel downstream ([[interpolateBuckets]] direct lerp, then the
-    * entry's own strict left folds) is a fixed sequence of IEEE ops on
-    * them — so each entry is bit-reproducible, and the DuckDB oracles of
-    * q_holt_prep, q_holt_forecast, q_hw_seasonal, q_ar_forecast and
-    * q_holt_gridsearch replay it exactly.
-    *
-    * ONE exchange: the pruned rows are hash-partitioned by series first,
-    * which satisfies both the (series, bucket) mean and the per-series
-    * group, so there is no partial aggregate before the shuffle and no
-    * second shuffle (nor an `AppendColumns` key deserialisation, as with
-    * a typed `groupByKey`). A partial aggregate only pays when buckets
-    * hold several readings: its DECIMAL sum buffers make each shuffled
-    * row wider than a raw (series, bucket, value) row, and break-even is
-    * about 2.5 readings per (series, bucket). The test data holds 1.02
-    * per group at sf0.01 and sf0.1, and the perfbench sensor input 1.15
-    * (seed 1: 100,000 rows in 86,731 groups), where the partial aggregate
-    * shipped 1.35 MB against 1.24 MB of raw rows and the second shuffle
-    * another 1.39 MB; `ScaleUp` keeps group sizes constant. */
-  def denseSeries(s: SparkSession, d: String, bucketSec: Long = 1800L)
-      : org.apache.spark.sql.KeyValueGroupedDataset[Long, (Long, Long, Double)] = {
+    * kernel downstream ([[interpolateBuckets]], then the entry's own
+    * strict left folds) is a fixed sequence of IEEE ops on them — so each
+    * entry is bit-reproducible, and the DuckDB oracles of q_holt_prep,
+    * q_holt_forecast, q_hw_seasonal, q_ar_forecast and q_holt_gridsearch
+    * replay it exactly. */
+  def denseTable(s: SparkSession, d: String): Dataset[(Long, Long, Array[Double])] = {
+    import s.implicits._
+    Memo.cached(s, s"dense_series_30m:$d")(buildDenseTable(s, d))
+      .as[(Long, Long, Array[Double])]
+  }
+
+  /** The [[denseTable]] build, in ONE exchange: the pruned rows are
+    * hash-partitioned by series first, which satisfies both the
+    * (series, bucket) mean and the per-series group, so there is no
+    * partial aggregate before the shuffle and no second shuffle (nor an
+    * `AppendColumns` key deserialisation, as with a typed `groupByKey`).
+    * A partial aggregate only pays when buckets hold several readings:
+    * its DECIMAL sum buffers make each shuffled row wider than a raw
+    * (series, bucket, value) row, and break-even is about 2.5 readings per
+    * (series, bucket). The test data holds 1.02 per group at sf0.01 and
+    * sf0.1, and the perfbench sensor input 1.15 (seed 1: 100,000 rows in
+    * 86,731 groups), where the partial aggregate shipped 1.35 MB against
+    * 1.24 MB of raw rows and the second shuffle another 1.39 MB;
+    * `ScaleUp` keeps group sizes constant. */
+  private[graft] def buildDenseTable(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     import graft.operators.exactAvg
     Tables.events(s, d)
       .select(col("user_id").as("series"),
-        expr(s"unix_timestamp(ts) div $bucketSec").as("b"), col("value"))
+        expr("unix_timestamp(ts) div 1800").as("b"), col("value"))
       .repartition(col("series"))
       .groupBy("series", "b")
       .agg(exactAvg(col("value")).as("y"))
       .groupBy("series")
       .as[Long, (Long, Long, Double)]
-  }
-
-  /** Densify one [[denseSeries]] group: bucket means → the shared
-    * [[interpolateBuckets]] direct-lerp fill. */
-  def denseArray(it: Iterator[(Long, Long, Double)]): Array[Double] = denseBuckets(it)._2
-
-  /** [[denseArray]] with the group's first bucket index (0 when empty). */
-  private def denseBuckets(it: Iterator[(Long, Long, Double)]): (Long, Array[Double]) = {
-    val byBucket = it.map(r => r._2 -> r._3).toMap
-    if (byBucket.isEmpty) (0L, Array.empty[Double])
-    else (byBucket.keys.min, interpolateBuckets(byBucket).toArray)
+      .mapGroups { (k: Long, it: Iterator[(Long, Long, Double)]) =>
+        val byBucket = it.map(r => r._2 -> r._3).toMap
+        (k, byBucket.keys.min, interpolateBuckets(byBucket).toArray)
+      }
+      .toDF("series", "lo", "ys")
   }
 
   /** Whole-table entry: events → per-user Holt forecast, horizon steps of
-    * 30 minutes each, over the [[denseSeries]] input: [[quantileTrim]]
+    * 30 minutes each, over the [[denseTable]] input: [[quantileTrim]]
     * (type-7 lerp) then the [[holtFit]] strict left fold, which the
     * `q_holt_forecast` oracle replays. The raw-iterator kernel
     * ([[forecastGroup]]/[[resampleArray]]) remains for the streaming
@@ -325,9 +333,9 @@ object HoltForecast {
   def forecast(s: SparkSession, d: String,
       alpha: Double = 0.5, beta: Double = 0.3, horizon: Int = 6): DataFrame = {
     import s.implicits._
-    denseSeries(s, d)
-      .flatMapGroups { (k: Long, it: Iterator[(Long, Long, Double)]) =>
-        val ys = quantileTrim(scala.collection.immutable.ArraySeq.unsafeWrapArray(denseArray(it)))
+    denseTable(s, d)
+      .flatMap { case (k, _, dense) =>
+        val ys = quantileTrim(ArraySeq.unsafeWrapArray(dense))
         if (ys.isEmpty) Iterator.empty
         else {
           val (level, trend) = holtFit(ys, alpha, beta)

@@ -1,0 +1,249 @@
+package graft
+
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, KeyValueGroupedDataset}
+import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.functions._
+import scala.collection.immutable.ArraySeq
+import graft.functions.TextAnalytics
+import graft.operators.{TimeWindows, exactAvg}
+import graft.timeseries.{ArForecast, ArPoint, ArimaFit, ForecastPoint, HoltFit, HoltForecast}
+
+/** Every whole-table forecast entry reads the one memoized dense-series
+  * table ([[HoltForecast.denseTable]]), the 30-min resample groups epoch
+  * micros floored to the bucket instead of a `window()` struct, and tfidf
+  * clusters its documents by `doc_id` once. Each old formulation is kept
+  * here as the reference and must give the same rows and schema: the
+  * one-exchange `denseSeries` grouped by series, with each entry's kernel
+  * body in a `flatMapGroups`; the `window()` resample; tfidf without the
+  * `doc_id` exchange. */
+class DenseTableSpec extends SparkTestBase {
+  import spark.implicits._
+  import SensorShuffleSpec.{denseDir, emptyDir, oneRowDir}
+  import DenseTableSpec._
+
+  private val sf01 = java.nio.file.Paths.get(sf).resolveSibling("sf0.01").toString
+
+  private def rows(df: Dataset[_]): Seq[String] = df.toDF().collect().map(_.toString).sorted.toSeq
+
+  private def assertSame(name: String, cur: Dataset[_], ref: Dataset[_], nonEmpty: Boolean): Unit = {
+    assert(cur.schema == ref.schema, s"$name: schema differs\n${cur.schema}\n${ref.schema}")
+    val got = rows(cur)
+    if (nonEmpty) assert(got.nonEmpty, s"$name: no rows to compare")
+    assert(got == rows(ref), s"$name: rows differ")
+  }
+
+  /** The dense series before it was memoized: one exchange on series, the
+    * DECIMAL mean per (series, 30-min bucket), grouped by series. */
+  private def oldSeries(d: String): KeyValueGroupedDataset[Long, (Long, Long, Double)] =
+    Tables.events(spark, d)
+      .select(col("user_id").as("series"), expr("unix_timestamp(ts) div 1800").as("b"), col("value"))
+      .repartition(col("series"))
+      .groupBy("series", "b")
+      .agg(exactAvg(col("value")).as("y"))
+      .groupBy("series")
+      .as[Long, (Long, Long, Double)]
+
+  /** `kernel(series, first bucket, dense array)` in a `flatMapGroups` over
+    * [[oldSeries]]: the old per-entry shape. */
+  private def old[U: Encoder](d: String)(kernel: (Long, Long, Array[Double]) => Iterator[U]): Dataset[U] =
+    oldSeries(d).flatMapGroups { (k: Long, it: Iterator[(Long, Long, Double)]) =>
+      val byBucket = it.map(r => r._2 -> r._3).toMap
+      kernel(k, byBucket.keys.min, HoltForecast.interpolateBuckets(byBucket).toArray)
+    }
+
+  /** (entry, current form, old formulation) for every dense-table consumer. */
+  private val consumers: Seq[(String, String => Dataset[_], String => Dataset[_])] = Seq(
+    ("HoltForecast.prep", HoltForecast.prep(spark, _), d =>
+      old(d) { (k, lo, ys) =>
+        ys.iterator.zipWithIndex.map { case (v, i) => (k, (lo + i) * 1800L, v) }
+      }.toDF("series", "bucket", "y")),
+    ("HoltForecast.forecast", HoltForecast.forecast(spark, _), d =>
+      old(d) { (k, _, dense) =>
+        val ys = HoltForecast.quantileTrim(ArraySeq.unsafeWrapArray(dense))
+        val (level, trend) = HoltForecast.holtFit(ys, 0.5, 0.3)
+        (1 to 6).iterator.map(h => ForecastPoint(k, h, level + h * trend, level, trend, ys.length))
+      }.toDF()),
+    ("HoltForecast.hwForecast", HoltForecast.hwForecast(spark, _), d =>
+      old(d) { (k, _, dense) =>
+        val ys = ArraySeq.unsafeWrapArray(dense)
+        if (ys.length < 96) Iterator.empty
+        else {
+          val (level, trend, seas, phase) = HoltForecast.hwFit(ys, 0.5, 0.3, 0.3, 48)
+          (1 to 6).iterator.map { h =>
+            (k, h, HoltForecast.hwForecastPoint(level, trend, seas, phase, h),
+              level, trend, seas((phase + h - 1) % 48), ys.length)
+          }
+        }
+      }.toDF("series", "step", "forecast", "level", "trend", "seasonal", "n_obs")),
+    ("ArForecast.forecast", ArForecast.forecast(spark, _), d =>
+      old(d) { (k, _, dense) =>
+        val ys = ArraySeq.unsafeWrapArray(dense)
+        Iterator(0, 1).filter(dd => ys.length > 5 + dd).flatMap { dd =>
+          ArForecast.arimaForecast(ys, 4, dd, 6).iterator.zipWithIndex.map {
+            case (f, i) => ArPoint(k, i + 1, f, 4, dd, ys.length)
+          }
+        }
+      }.toDF()),
+    ("ArForecast.armaHrFixed", ArForecast.armaHrFixed(spark, _), d =>
+      old(d) { (k, _, raw) =>
+        if (raw.length < 2) Iterator.empty
+        else {
+          val cur = Array.tabulate(raw.length - 1)(j => raw(j + 1) - raw(j))
+          val n = cur.length
+          if (ArForecast.hrLongOrder(2, 1, n) != 10 || n - 10 - 1 <= 3) Iterator.empty
+          else {
+            val (mean, phi, theta) = ArForecast.hannanRissanen(ArraySeq.unsafeWrapArray(cur), 2, 1)
+            Iterator.single((k, n.toLong, mean, phi(0), phi(1), theta(0)))
+          }
+        }
+      }.toDF("series", "n", "mu", "phi1", "phi2", "theta1")),
+    ("ArForecast.arimaCss", ArForecast.arimaCss(spark, _), d =>
+      old(d) { (k, _, raw) =>
+        val combos = ArForecast.arimaGridMses(raw, pGrid, dGrid, qGrid)
+        if (combos.isEmpty) Iterator.empty
+        else ArForecast.firstArgmin(combos) match {
+          case None =>
+            Iterator.single((k, -1, 0, 0, raw.length.toLong, Double.NaN, Double.NaN, true, true))
+          case Some((p, dd, q, _)) =>
+            var cur = raw
+            for (_ <- 0 until dd) { val prev = cur; cur = Array.tabulate(prev.length - 1)(j => prev(j + 1) - prev(j)) }
+            val (mean, phi, theta) = ArForecast.hannanRissanen(ArraySeq.unsafeWrapArray(cur), p, q)
+            val x = Array.tabulate(cur.length)(cur(_) - mean)
+            val hrMse = ArForecast.armaWalkForward(x, 0, phi, theta)._1
+            val (_, _, cssMse) = ArForecast.cssRefine(x, phi, theta)
+            Iterator.single((k, p, dd, q, cur.length.toLong, round6(hrMse), round6(cssMse),
+              cssMse <= hrMse, false))
+        }
+      }.toDF("series", "p", "d", "q", "n", "hr_mse", "css_mse", "improved", "nan_winner")),
+    ("ArForecast.arimaGridSearch", ArForecast.arimaGridSearch(spark, _), d =>
+      old(d) { (k, _, raw) =>
+        ArForecast.bestArimaOrders(raw, pGrid, dGrid, qGrid).iterator.flatMap { case (p, dd, q, mse) =>
+          ArForecast.arimaForecast(ArraySeq.unsafeWrapArray(raw), p, dd, q, 3)
+            .iterator.zipWithIndex.map { case (f, i) => ArimaFit(k, p, dd, q, mse, i + 1, f) }
+        }
+      }.toDF()),
+    ("ArForecast.arimaFamily", ArForecast.arimaFamily(spark, _, pGrid, dGrid, qGrid, 3), d =>
+      old(d) { (k, _, raw) =>
+        val combos = ArForecast.arimaGridMses(raw, pGrid, dGrid, qGrid)
+        if (combos.isEmpty) Iterator.empty
+        else ArForecast.firstArgmin(combos) match {
+          case None =>
+            Iterator.single((k, raw.length.toLong, true, -1, 0, 0, Double.NaN, true, true, true, true))
+          case Some((p, dd, q, mse)) =>
+            val finite = combos.zipWithIndex.filter(c => !c._1._4.isNaN)
+            val am = finite.minBy { case ((_, _, _, m), i) => (m, i) }
+            val argminOk = am._1._1 == p && am._1._2 == dd && am._1._3 == q && am._1._4 == mse
+            val inGridOk = pGrid.contains(p) && dGrid.contains(dd) && qGrid.contains(q)
+            val finiteOk = java.lang.Double.isFinite(mse) && mse >= 0.0
+            val fc = ArForecast.arimaForecast(ArraySeq.unsafeWrapArray(raw), p, dd, q, 3)
+            val fcOk = fc.length == 3 && fc.forall(java.lang.Double.isFinite)
+            Iterator.single((k, raw.length.toLong, false, p, dd, q, mse, inGridOk, finiteOk, argminOk, fcOk))
+        }
+      }.toDF("series", "nb", "nan_winner", "p", "d", "q", "val_mse", "in_grid", "mse_ok",
+        "argmin_ok", "fc_ok")),
+    ("ArForecast.forecastCv", ArForecast.forecastCv(spark, _), d =>
+      old(d) { (k, _, raw) => ArForecast.cvGroup(k, raw, pGrid, dGrid, qGrid) }.toDF()),
+    ("ArForecast.holtGridSearch", ArForecast.holtGridSearch(spark, _), d =>
+      old(d) { (k, _, raw) =>
+        ArForecast.bestHoltParams(raw).iterator.flatMap { case (a, b, mse, level, trend) =>
+          (1 to 3).iterator.map(h => HoltFit(k, a, b, mse, h, level + h * trend))
+        }
+      }.toDF()))
+
+  private val inputs = Seq("sf0.01" -> (() => sf01), "the 5x dense sf0.001 input" -> (() => denseDir(sf)))
+
+  for ((label, dir) <- inputs)
+    test(s"every dense-table consumer equals its flatMapGroups form on $label (rows and schema)") {
+      for ((name, current, ref) <- consumers)
+        assertSame(name, current(dir()), ref(dir()), nonEmpty = label == "sf0.01")
+    }
+
+  test("the dense table holds one row per series, read by later entries without a rebuild") {
+    Memo.clear(spark)
+    val built = Memo.buildSeconds
+    val table = HoltForecast.denseTable(spark, sf01)
+    val once = Memo.buildSeconds
+    assert(once > built, "the first read builds the table")
+    assert(table.count() == Tables.events(spark, sf01).select("user_id").distinct().count())
+    HoltForecast.forecast(spark, sf01).count()
+    ArForecast.forecast(spark, sf01).count()
+    assert(Memo.buildSeconds == once, "a consumer rebuilt the dense table")
+  }
+
+  test("empty and one-row events tables through the dense table: no rows, or the old rows") {
+    val (empty, oneRow) = (emptyDir(sf), oneRowDir(sf))
+    for ((name, current, ref) <- consumers) {
+      assert(current(empty).isEmpty, s"$name: rows from an empty table")
+      assertSame(s"$name (one row)", current(oneRow), ref(oneRow), nonEmpty = false)
+    }
+    assert(HoltForecast.denseTable(spark, empty).isEmpty)
+    val one = HoltForecast.denseTable(spark, oneRow).collect()
+    assert(one.length == 1 && one.head._3.length == 1)
+  }
+
+  /** The resample before this form: a `window()` struct as the group key. */
+  private def windowResample(d: String): DataFrame =
+    Tables.events(spark, d)
+      .groupBy(col("user_id"), window(col("ts"), "30 minutes"))
+      .agg(exactAvg(col("value")).as("avg_value"), count(lit(1)).as("n"), max("value").as("max_value"))
+      .select(col("user_id"), col("window.start").as("bucket"), col("avg_value"), col("n"),
+        col("max_value"))
+
+  /** sf0.001 events with `ts` replaced by bucket edges: sub-second times,
+    * times before 1970 (one µs, one bucket and one µs, and 65 min before
+    * the epoch) and null, two series. */
+  private lazy val edgeDir: String = {
+    val micros: Seq[Option[Long]] = Seq(Some(-1L), Some(0L), Some(-1800000000L), Some(-1800000001L),
+      Some(-3900000000L), Some(1700000000123456L), Some(1700000000999999L), Some(1699999199999999L),
+      Some(1699999200000000L), None, None, Some(-1L))
+    val d = Scratch.dir("dense_table_resample_edges")
+    val ts = micros.zipWithIndex.map { case (u, i) => (i.toLong, u) }.toDF("i", "us")
+    Tables.events(spark, sf).orderBy("event_id").limit(micros.size)
+      .withColumn("i", row_number().over(Window.orderBy("event_id")) - 1L)
+      .join(ts, "i")
+      .withColumn("ts", timestamp_micros(col("us")))
+      .withColumn("user_id", col("i") % 2)
+      .drop("i", "us")
+      .write.mode("overwrite").parquet(s"$d/events.parquet")
+    d
+  }
+
+  test("resample30m equals the window() form on sf0.01, the dense input and bucket edges") {
+    for ((label, d) <- inputs :+ ("bucket edges" -> (() => edgeDir)))
+      assertSame(s"resample30m on $label", TimeWindows.resample30m(spark, d()), windowResample(d()),
+        nonEmpty = true)
+    val edges = TimeWindows.resample30m(spark, edgeDir)
+    val preEpoch = edges.where(col("user_id") === 0L && col("bucket") === timestamp_micros(lit(-1800000000L)))
+    assert(preEpoch.select("n").as[Long].collect().toSeq == Seq(2L),
+      "-1 µs and -30 min share the bucket starting 30 min before the epoch")
+    assert(edges.where(col("bucket").isNull).isEmpty, "null ts rows are dropped")
+  }
+
+  test("tfidfTopTerms equals the form without the doc_id exchange") {
+    def oldTfidf(d: String): DataFrame = {
+      val n = Tables.rowCount(spark, s"$d/documents.parquet")
+      val tf = Tables.documents(spark, d)
+        .select(col("doc_id"), explode(TextAnalytics.tokens(col("text"))).as("term"))
+        .groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
+      val dfreq = tf.groupBy("term").agg(count(lit(1)).as("df"))
+      val w = Window.partitionBy("doc_id").orderBy(col("score").desc, col("term").asc)
+      tf.join(dfreq, Seq("term"))
+        .withColumn("score", round(col("tf") * (log((lit(n) + 1.0) / (col("df") + 1.0)) + 1.0), 6))
+        .withColumn("rank", row_number().over(w))
+        .where(col("rank") <= 3)
+        .select("doc_id", "rank", "term", "tf", "df", "score")
+    }
+    for (d <- Seq(sf, sf01))
+      assertSame(s"tfidfTopTerms on $d", TextAnalytics.tfidfTopTerms(spark, d), oldTfidf(d), nonEmpty = true)
+  }
+}
+
+object DenseTableSpec {
+  private val pGrid = Seq(4, 6, 8, 10)
+  private val dGrid = Seq(1, 2)
+  private val qGrid = Seq(0, 1, 2)
+
+  private def round6(v: Double): Double =
+    if (java.lang.Double.isFinite(v)) BigDecimal(v).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
+    else v
+}

@@ -11,8 +11,9 @@ import graft.etl.SensorEtl
 import graft.operators.{Dedup, exactAvg}
 import graft.timeseries.{ArForecast, ArPoint, ForecastPoint, HoltFit, HoltForecast}
 
-/** The sensor operators shuffle once: the ETL spine is one aggregate, and
-  * every forecast entry reads its dense series through one exchange. Each
+/** The sensor operators shuffle once: the ETL spine is one aggregate, the
+  * 30-min dense series is built through one exchange and then read by
+  * every forecast entry with none, and the resample is one exchange. Each
   * old formulation is kept here as the reference — the target ⋈ pivot
   * wide table, and the groupBy → typed `groupByKey` dense series — and
   * must give the same rows and schema on sf0.01 and on a dense input
@@ -101,22 +102,7 @@ class SensorShuffleSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
   private val entries: Seq[(String, String => DataFrame, String => DataFrame)] =
     ("SensorEtl.wide", (d: String) => SensorEtl.wide(spark, d), oldWide _) +: forecastEntries
 
-  /** sf0.001 events, each repeated 5× with its `ts` moved inside its own
-    * 30-min bucket (so inside its day) and its `value` varied: buckets
-    * then hold several readings, and the DECIMAL sums add real terms. */
-  private lazy val denseDir: String = {
-    val d = Scratch.dir("sensor_shuffle_dense")
-    val ev = Tables.events(spark, sf)
-    (0 until 5).map { k =>
-      ev.withColumn("event_id", col("event_id") * 5 + k)
-        .withColumn("ts", timestamp_seconds(expr(
-          s"(unix_timestamp(ts) div 1800) * 1800 + (unix_timestamp(ts) % 1800 + ${k * 379}) % 1800")))
-        .withColumn("value", round(col("value") + k * 1.25, 2))
-    }.reduce(_ unionByName _).write.mode("overwrite").parquet(s"$d/events.parquet")
-    d
-  }
-
-  for ((label, dir) <- Seq("sf0.01" -> (() => sf01), "the 5x dense sf0.001 input" -> (() => denseDir)))
+  for ((label, dir) <- Seq("sf0.01" -> (() => sf01), "the 5x dense sf0.001 input" -> (() => denseDir(sf))))
     test(s"every sensor operator equals its old formulation on $label (rows and schema)") {
       for ((name, current, old) <- entries) {
         val (cur, ref) = (current(dir()), old(dir()))
@@ -128,7 +114,7 @@ class SensorShuffleSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
     }
 
   test("the dense input holds several readings per (series, 30-min bucket)") {
-    val perBucket = Tables.events(spark, denseDir)
+    val perBucket = Tables.events(spark, denseDir(sf))
       .groupBy(col("user_id"), expr("unix_timestamp(ts) div 1800"))
       .count().agg(avg("count")).head().getDouble(0)
     assert(perBucket >= 5.0, s"only $perBucket readings per bucket")
@@ -152,23 +138,30 @@ class SensorShuffleSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
     assert(eventScans(p) == 1, s"events scans:\n$p")
   }
 
+  test("the dense series table builds with one shuffle exchange (final adaptive plan, sf0.01)") {
+    val p = finalPlan(HoltForecast.buildDenseTable(spark, sf01))
+    assert(shuffles(p) == 1, s"shuffle exchanges:\n$p")
+  }
+
   for (q <- Seq("q_holt_forecast", "q_ar_forecast", "q_holt_prep", "q_hw_seasonal"))
-    test(s"$q runs one shuffle exchange (final adaptive plan, sf0.01)") {
+    test(s"$q runs no shuffle exchange over the built dense table") {
+      HoltForecast.denseTable(spark, sf01)
       val p = finalPlan(SparkEntry.queries(q)(spark, sf01))
-      assert(shuffles(p) == 1, s"shuffle exchanges:\n$p")
+      assert(shuffles(p) == 0, s"shuffle exchanges:\n$p")
     }
 
-  /** The first `n` sf0.001 events (by event_id) as an events table. */
-  private def firstEvents(tag: String, n: Int): String = {
-    val d = Scratch.dir(tag)
-    Tables.events(spark, sf).orderBy("event_id").limit(n).coalesce(1)
-      .write.mode("overwrite").parquet(s"$d/events.parquet")
-    d
+  test("q_resample_30m runs one shuffle exchange (final adaptive plan, sf0.01)") {
+    val p = finalPlan(SparkEntry.queries("q_resample_30m")(spark, sf01))
+    assert(shuffles(p) == 1, s"shuffle exchanges:\n$p")
+  }
+
+  test("q_tfidf runs at most two shuffle exchanges (final adaptive plan, sf0.01)") {
+    val p = finalPlan(SparkEntry.queries("q_tfidf")(spark, sf01))
+    assert(shuffles(p) <= 2, s"shuffle exchanges:\n$p")
   }
 
   test("empty and one-row events tables return zero or valid rows") {
-    val empty = firstEvents("sensor_shuffle_empty", 0)
-    val one = firstEvents("sensor_shuffle_one", 1)
+    val (empty, one) = (emptyDir(sf), oneRowDir(sf))
     for ((name, current, old) <- entries) {
       assert(current(empty).collect().isEmpty, s"$name: rows from an empty table")
       assert(rows(current(one)) == rows(old(one)), s"$name: one-row table")
@@ -204,9 +197,39 @@ class SensorShuffleSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
 }
 
 object SensorShuffleSpec {
+  private def session = SparkTestBase.session
+  private val written = scala.collection.concurrent.TrieMap.empty[String, String]
+
   private def buckets(it: Iterator[(Long, Long, Double)]): Map[Long, Double] =
     it.map(r => r._2 -> r._3).toMap
 
   private def oldArray(it: Iterator[(Long, Long, Double)]): Array[Double] =
     HoltForecast.interpolateBuckets(buckets(it)).toArray
+
+  /** The scratch dir `tag`, filled by `write` once per JVM and then
+    * shared by every spec that reads it. */
+  private def once(tag: String)(write: String => Unit): String =
+    written.getOrElseUpdate(tag, { val d = Scratch.dir(tag); write(d); d })
+
+  /** The `sf` events, each repeated 5× with its `ts` moved inside its own
+    * 30-min bucket (so inside its day) and its `value` varied: buckets
+    * then hold several readings, and the DECIMAL sums add real terms. */
+  def denseDir(sf: String): String = once("sensor_shuffle_dense") { d =>
+    val ev = Tables.events(session, sf)
+    (0 until 5).map { k =>
+      ev.withColumn("event_id", col("event_id") * 5 + k)
+        .withColumn("ts", timestamp_seconds(expr(
+          s"(unix_timestamp(ts) div 1800) * 1800 + (unix_timestamp(ts) % 1800 + ${k * 379}) % 1800")))
+        .withColumn("value", round(col("value") + k * 1.25, 2))
+    }.reduce(_ unionByName _).write.mode("overwrite").parquet(s"$d/events.parquet")
+  }
+
+  /** The first `n` `sf` events (by event_id) as an events table. */
+  private def firstEvents(sf: String, tag: String, n: Int): String = once(tag) { d =>
+    Tables.events(session, sf).orderBy("event_id").limit(n).coalesce(1)
+      .write.mode("overwrite").parquet(s"$d/events.parquet")
+  }
+
+  def emptyDir(sf: String): String = firstEvents(sf, "sensor_shuffle_empty", 0)
+  def oneRowDir(sf: String): String = firstEvents(sf, "sensor_shuffle_one", 1)
 }
