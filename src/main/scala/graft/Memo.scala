@@ -23,8 +23,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * The checkpointed frame does NOT keep its build's output partitioning:
   * under AQE it reports `UnknownPartitioning`, so a consumer that groups
   * or joins it by the build's key shuffles it again. A keyed intermediate
-  * is therefore memoized one row per key (the dense series table holds
-  * each series' whole array in one row), so its consumers are per-row
+  * is therefore memoized one row per key (the 30-min bucket table holds
+  * each series' bucket arrays in one row), so its consumers are per-row
   * maps with no exchange.
   *
   * Lifecycle: entries of STOPPED sessions are pruned on every public

@@ -28,19 +28,27 @@ object OracleCtes {
 
   private[gates] val NgramPairCtes: String = ngramPairCtes("documents")
 
+  /** The 30-min bucket index of `ts`, floored also before 1970 (the
+    * `HoltForecast.bucketTable` key; integer `//` truncates toward zero,
+    * but the `time_bucket` start is a whole multiple of the divisor). */
+  private[gates] val Bucket30m: String =
+    "epoch_us(time_bucket(INTERVAL '30 minutes', ts)) // 1800000000"
+
   /** Shared dense-series CTE block: per-(series = user, 30-min bucket)
     * DECIMAL-exact means over events, filled by the direct-lerp
     * interpolation, re-indexed 0..n−1 per series (`idx(series, y, i,
-    * n)`). The common input of every forecast-kernel oracle
-    * (`q_holt_prep`'s proven prefix, `q_holt_forecast`,
-    * `q_holt_gridsearch`) — the Spark twin is exactAvg →
-    * `HoltForecast.interpolateBuckets`. */
+    * n)`). A bucket with a null mean is a gap, and the series spans its
+    * first to last non-null mean. The common input of every
+    * forecast-kernel oracle (`q_holt_prep`, `q_holt_forecast`,
+    * `q_holt_gridsearch`) — the Spark twin is `HoltForecast.denseTable`:
+    * exactAvg → `HoltForecast.interpolateBuckets`. */
   private[gates] val HoltDenseCtes: String =
-    """m AS (
-      |  SELECT user_id AS series, CAST(floor(epoch(ts)) AS BIGINT) // 1800 AS b,
+    s"""m AS (
+      |  SELECT user_id AS series, $Bucket30m AS b,
       |    CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) / count(*) AS y
       |  FROM events GROUP BY 1, 2),
-      |bounds AS (SELECT series, min(b) AS mn, max(b) AS mx FROM m GROUP BY 1),
+      |bounds AS (
+      |  SELECT series, min(b) AS mn, max(b) AS mx FROM m WHERE y IS NOT NULL GROUP BY 1),
       |spine AS (SELECT series, unnest(generate_series(mn, mx)) AS b FROM bounds),
       |j AS (
       |  SELECT s.series, s.b, m.y FROM spine s

@@ -133,16 +133,14 @@ object WindowGates {
   )
 
   /** Eligible-series universe CTEs shared by the three ARIMA-composite
-    * verdict oracles (r15): dense 30-min bucket span per series (the
-    * q_holt_prep bucket expression) and the grid-search length rule
-    * `floor(0.8·nb) ≥ pMax + dMax + qMax + 2 = 16` applied as a literal
-    * computed from the default grids (p ≤ 10, d ≤ 2, q ≤ 2). */
+    * verdict oracles (r15): dense 30-min bucket span per series over its
+    * buckets with a value (the q_holt_prep span) and the grid-search
+    * length rule `floor(0.8·nb) ≥ pMax + dMax + qMax + 2 = 16` applied
+    * as a literal computed from the default grids (p ≤ 10, d ≤ 2, q ≤ 2). */
   private val ArimaEligibleCtes =
-    """bounds AS (
-      |  SELECT user_id AS series,
-      |    max(CAST(floor(epoch(ts)) AS BIGINT) // 1800)
-      |      - min(CAST(floor(epoch(ts)) AS BIGINT) // 1800) + 1 AS nb
-      |  FROM events GROUP BY 1),
+    s"""bounds AS (
+      |  SELECT user_id AS series, max($Bucket30m) - min($Bucket30m) + 1 AS nb
+      |  FROM events WHERE value IS NOT NULL GROUP BY 1),
       |el AS (SELECT nb FROM bounds WHERE CAST(floor(0.8 * nb) AS BIGINT) >= 16),
       |ag AS (SELECT CAST(count(*) AS BIGINT) AS n_series,
       |  CAST(COALESCE(sum(nb), 0) AS BIGINT) AS sum_n_buckets FROM el)""".stripMargin
@@ -502,34 +500,8 @@ object WindowGates {
     // dense spine, direct-lerp gap fill — hash-matches the in-JVM
     // interpolateBuckets kernel bit for bit (VERDICT r2 item 7)
     "q_holt_prep" ->
-      """WITH m AS (
-        |  SELECT user_id AS series, CAST(floor(epoch(ts)) AS BIGINT) // 1800 AS b,
-        |    CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) / count(*) AS y
-        |  FROM events GROUP BY 1, 2),
-        |bounds AS (SELECT series, min(b) AS mn, max(b) AS mx FROM m GROUP BY 1),
-        |spine AS (SELECT series, unnest(generate_series(mn, mx)) AS b FROM bounds),
-        |j AS (
-        |  SELECT s.series, s.b, m.y FROM spine s
-        |  LEFT JOIN m ON s.series = m.series AND s.b = m.b),
-        |x AS (
-        |  SELECT series, b, y,
-        |    last_value(y IGNORE NULLS) OVER (PARTITION BY series ORDER BY b
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS prev_v,
-        |    last_value(CASE WHEN y IS NOT NULL THEN b END IGNORE NULLS) OVER (
-        |      PARTITION BY series ORDER BY b
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS prev_b,
-        |    first_value(y IGNORE NULLS) OVER (PARTITION BY series ORDER BY b
-        |      ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING) AS next_v,
-        |    first_value(CASE WHEN y IS NOT NULL THEN b END IGNORE NULLS) OVER (
-        |      PARTITION BY series ORDER BY b
-        |      ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING) AS next_b
-        |  FROM j)
-        |SELECT series, b * 1800 AS bucket,
-        |  CASE WHEN y IS NOT NULL THEN y
-        |       ELSE prev_v + (next_v - prev_v) *
-        |         (CAST(b - prev_b AS DOUBLE) / CAST(next_b - prev_b AS DOUBLE))
-        |  END AS y
-        |FROM x""".stripMargin,
+      s"""WITH $HoltDenseCtes
+        |SELECT series, b * 1800 AS bucket, y FROM dense""".stripMargin,
 
     // the full Holt kernel replayed in SQL: the q_holt_prep dense-series
     // CTEs (DECIMAL means + direct-lerp fill, proven hash-exact) feed a

@@ -187,8 +187,9 @@ object Pipelines {
       .toDF("metric", "value")
   }
 
-  /** The fitted state [[regression]] and [[regressionVerdict]] share. */
-  private case class RegFit(labeled: DataFrame, nTrain: Long, nTest: Long,
+  /** The fitted state [[regression]] and [[regressionVerdict]] share.
+    * The split halves stay lazy: only the verdict counts them. */
+  private case class RegFit(labeled: DataFrame, train: DataFrame, predictions: DataFrame,
       r2: Double, rmse: Double, mse: Double, importances: Array[Double])
 
   private def regressionFit(s: SparkSession, d: String): RegFit = {
@@ -207,9 +208,11 @@ object Pipelines {
       .setMaxIter(10).setMaxDepth(4).setSeed(42L)
     val pipeline = new Pipeline().setStages(Array(assembler, gbt))
 
+    // no cache on the split: GBT persists its own instances, and the
+    // predictions have one reader in regression
     val Array(train, test) = labeled.randomSplit(Array(0.75, 0.25), seed = 42L)
-    val model = pipeline.fit(train.cache())
-    val predictions = model.transform(test).cache()
+    val model = pipeline.fit(train)
+    val predictions = model.transform(test)
 
     // the evaluator's own metrics object: one aggregation job serves r2,
     // rmse and mse, each the value evaluate() would return for it
@@ -218,7 +221,7 @@ object Pipelines {
       .getMetrics(predictions)
 
     val gbtModel = model.stages.last.asInstanceOf[GBTRegressionModel]
-    RegFit(labeled, train.count(), predictions.count(),
+    RegFit(labeled, train, predictions,
       metrics.r2, metrics.rootMeanSquaredError, metrics.meanSquaredError,
       gbtModel.featureImportances.toArray)
   }
@@ -242,7 +245,7 @@ object Pipelines {
       sum((col("next_day_max").cast(DecimalType(18, 2)) * 100)
         .cast("long")).as("label_cents_sum")).head()
     val nLabeled = m.getAs[Long]("n_labeled")
-    val splitOk = fit.nTrain + fit.nTest == nLabeled
+    val splitOk = fit.train.count() + fit.predictions.count() == nLabeled
     val impOk = fit.importances.forall(_ >= 0.0) &&
       math.abs(fit.importances.sum - 1.0) <= 1e-6
     val rmseMseOk = math.abs(fit.rmse * fit.rmse - fit.mse) <=

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.timeseries.HoltForecast
 
 /** Window / time-series operator battery (SURVEY.md §2.5, A5-A7, W1-W6).
   *
@@ -46,29 +47,20 @@ object TimeWindows {
 
   /** W3+A7 — 30-minute tumbling-window resample with mean, per series
     * (cf. pandas `resample('30T').mean()`,
-    * `spark_pandas_timeseries_forecast.py:34-35`). One exchange: the
-    * pruned (user_id, bucket start, value) rows are hash-partitioned by
-    * series, which also satisfies the (user_id, bucket) groupBy, so no
-    * partial aggregate ships a window struct and DECIMAL sum buffers per
-    * bucket (at 1.15 readings per bucket the raw rows are the smaller
-    * shuffle, as for [[graft.timeseries.HoltForecast.denseTable]]). The
-    * bucket start is the floor of the epoch micros to 30 minutes, which
-    * is `window(ts, "30 minutes").start` also before 1970, where the
-    * `unix_timestamp(ts) div 1800` key of the forecasts truncates toward
-    * zero; rows with a null `ts` are dropped, as `window()` drops them. */
-  def resample30m(s: SparkSession, d: String): DataFrame = {
-    val us = expr("unix_micros(ts)")
-    Tables.events(s, d)
-      .where(col("ts").isNotNull)
-      .select(col("user_id"), (us - pmod(us, lit(1800000000L))).as("b"), col("value"))
-      .repartition(col("user_id"))
-      .groupBy("user_id", "b")
-      .agg(exactAvg(col("value")).as("avg_value"),
-        count(lit(1)).as("n"),
-        max("value").as("max_value"))
-      .select(col("user_id"), timestamp_micros(col("b")).as("bucket"),
-        col("avg_value"), col("n"), col("max_value"))
-  }
+    * `spark_pandas_timeseries_forecast.py:34-35`): the rows of the
+    * memoized [[graft.timeseries.HoltForecast.bucketTable]], the same
+    * per-series bucket statistics the forecasts interpolate, so one scan
+    * and one exchange serve both. The bucket start is the epoch micros
+    * floored to 30 minutes, which is `window(ts, "30 minutes").start`
+    * also before 1970; rows with a null `ts` are dropped, as `window()`
+    * drops them. The `when`/`coalesce` keep the old nullability:
+    * `user_id` as read from parquet, `n` a count. */
+  def resample30m(s: SparkSession, d: String): DataFrame =
+    HoltForecast.bucketTable(s, d)
+      .select(col("series"), inline(arrays_zip(col("bs"), col("ys"), col("ns"), col("mxs"))))
+      .select(when(col("series").isNotNull, col("series")).as("user_id"),
+        timestamp_micros(col("bs") * HoltForecast.BucketMicros).as("bucket"),
+        col("ys").as("avg_value"), coalesce(col("ns"), lit(0L)).as("n"), col("mxs").as("max_value"))
 
   /** Hourly per-series means joined onto a dense per-series hour spine
     * (generated with `sequence()` — the distributed analog of a pandas

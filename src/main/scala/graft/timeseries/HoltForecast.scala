@@ -20,11 +20,13 @@ case class ForecastPoint(series: Long, step: Int, forecast: Double,
   * trim → fit Holt's linear-trend exponential smoothing → h-step forecast.
   *
   * Design: the paper resamples each series once and fits on that series,
-  * so the 30-min dense series is built once per (session, dir) as
-  * [[denseTable]] — one shuffle on the series key, one row per series —
-  * and every whole-table entry is a per-row `flatMap` over it that keeps
-  * the whole kernel inside the executor JVM: no Arrow hop, no Python
-  * worker (the boundary SURVEY.md §3 E3 deletes), and no further shuffle.
+  * so the per-series 30-min bucket statistics are built once per
+  * (session, dir) as [[bucketTable]] — one shuffle on the series key, one
+  * row per series — which serves both the `resample30m` operator and
+  * [[denseTable]], the interpolated series every whole-table entry reads.
+  * Each entry is then a per-row `flatMap` that keeps the whole kernel
+  * inside the executor JVM: no Arrow hop, no Python worker (the boundary
+  * SURVEY.md §3 E3 deletes), and no further shuffle.
   * Per-series state is O(series length after resampling), which is
   * bounded by the time range, not the corpus. Two reference bugs fixed (SURVEY §8):
   * grouping is by SERIES (the reference grouped by ('datetime','O2') —
@@ -87,7 +89,7 @@ object HoltForecast {
     * the in-group mirror of pandas `resample('30T').mean().interpolate()`. */
   def resampleInterpolate(points: Seq[(Long, Double)], bucketSec: Long = 1800L): IndexedSeq[Double] = {
     if (points.isEmpty) return IndexedSeq.empty
-    interpolateBuckets(points.groupBy(p => p._1 / bucketSec)
+    interpolateBuckets(points.groupBy(p => Math.floorDiv(p._1, bucketSec))
       .map { case (b, ps) => b -> ps.map(_._2).sum / ps.size })
   }
 
@@ -133,7 +135,7 @@ object HoltForecast {
   def resampleArray(it: Iterator[(Long, Double)], bucketSec: Long = 1800L): Array[Double] = {
     val sums = scala.collection.mutable.HashMap.empty[Long, (Double, Int)]
     it.foreach { case (t, v) =>
-      val b = t / bucketSec
+      val b = Math.floorDiv(t, bucketSec)
       val (s0, n0) = sums.getOrElse(b, (0.0, 0))
       sums(b) = (s0 + v, n0 + 1)
     }
@@ -270,15 +272,63 @@ object HoltForecast {
       .toDF("series", "step", "forecast", "level", "trend", "seasonal", "n_obs")
   }
 
+  /** One 30-min bucket in epoch micros. */
+  private[graft] val BucketMicros = 1800000000L
+
+  /** Per-series 30-min bucket statistics, one row per series:
+    * `(series, bs, ys, ns, mxs)`, parallel arrays sorted by bucket — the
+    * bucket index `b` (bucket start = b · 30 min, floored also before
+    * 1970), the DECIMAL-exact mean ([[graft.operators.exactAvg]]), the
+    * row count and the max of `value`. A bucket whose values are all null
+    * keeps a null mean and max; rows with a null `ts` are dropped. Built
+    * once per (session, dir) and memoized ([[graft.Memo]]): it is the one
+    * scan and shuffle of the readings behind both
+    * [[graft.operators.TimeWindows.resample30m]] and [[denseTable]]. A
+    * memoized frame loses its output partitioning, so the table holds one
+    * row per series, not one per (series, bucket): keyed rows would be
+    * shuffled again by every consumer. */
+  def bucketTable(s: SparkSession, d: String): DataFrame =
+    Memo.cached(s, s"buckets_30m:$d")(buildBucketTable(s, d))
+
+  /** The [[bucketTable]] build, in ONE exchange: the pruned rows are
+    * hash-partitioned by series first, which satisfies both the
+    * (series, bucket) aggregate and the per-series group, so there is no
+    * partial aggregate before the shuffle and no second shuffle (nor an
+    * `AppendColumns` key deserialisation, as with a typed `groupByKey`).
+    * A partial aggregate only pays when buckets hold several readings:
+    * its DECIMAL sum buffers make each shuffled row wider than a raw
+    * (series, bucket, value) row, and break-even is about 2.5 readings per
+    * (series, bucket). The test data holds 1.02 per group at sf0.01 and
+    * sf0.1, and the perfbench sensor input 1.15 (seed 1: 100,000 rows in
+    * 86,731 groups); `ScaleUp` keeps group sizes constant. The key is
+    * exact long arithmetic on the epoch micros. */
+  private[graft] def buildBucketTable(s: SparkSession, d: String): DataFrame = {
+    import s.implicits._
+    import graft.operators.exactAvg
+    Tables.events(s, d)
+      .where(col("ts").isNotNull)
+      .select(col("user_id").as("series"),
+        expr(s"(unix_micros(ts) - pmod(unix_micros(ts), $BucketMicros)) div $BucketMicros").as("b"),
+        col("value"))
+      .repartition(col("series"))
+      .groupBy("series", "b")
+      .agg(exactAvg(col("value")).as("y"), count(lit(1)).as("n"), max("value").as("mx"))
+      .groupBy("series")
+      .as[Long, (Long, Long, Option[Double], Long, Option[Double])]
+      .mapGroups { (k: Long, it: Iterator[(Long, Long, Option[Double], Long, Option[Double])]) =>
+        val rs = it.toArray.sortBy(_._2)
+        (k, rs.map(_._2), rs.map(_._3), rs.map(_._4), rs.map(_._5))
+      }
+      .toDF("series", "bs", "ys", "ns", "mxs")
+  }
+
   /** The deterministic dense-series input of every whole-table forecast
     * entry (the q_holt_prep path), one row per series: `(series, lo, ys)`,
     * where `ys` is the series' 30-min bucket means from bucket `lo` on,
-    * gaps filled by the shared [[interpolateBuckets]] direct lerp. Built
-    * once per (session, dir) and memoized ([[graft.Memo]]), so the entries
-    * after the first read it with no exchange: each is a per-row `flatMap`.
-    * A memoized frame loses its output partitioning, so the table holds
-    * one row per series, not one per (series, bucket): keyed rows would be
-    * shuffled again by every consumer.
+    * gaps filled by the shared [[interpolateBuckets]] direct lerp. A
+    * per-row map over the memoized [[bucketTable]], so no entry shuffles.
+    * A bucket with a null mean (all its values null) is a gap; a series
+    * with no mean at all is left out.
     *
     * DETERMINISM: the means come from the order-independent DECIMAL
     * `exactAvg`, not a float accumulation in iterator order, and every
@@ -289,39 +339,13 @@ object HoltForecast {
     * replay it exactly. */
   def denseTable(s: SparkSession, d: String): Dataset[(Long, Long, Array[Double])] = {
     import s.implicits._
-    Memo.cached(s, s"dense_series_30m:$d")(buildDenseTable(s, d))
-      .as[(Long, Long, Array[Double])]
-  }
-
-  /** The [[denseTable]] build, in ONE exchange: the pruned rows are
-    * hash-partitioned by series first, which satisfies both the
-    * (series, bucket) mean and the per-series group, so there is no
-    * partial aggregate before the shuffle and no second shuffle (nor an
-    * `AppendColumns` key deserialisation, as with a typed `groupByKey`).
-    * A partial aggregate only pays when buckets hold several readings:
-    * its DECIMAL sum buffers make each shuffled row wider than a raw
-    * (series, bucket, value) row, and break-even is about 2.5 readings per
-    * (series, bucket). The test data holds 1.02 per group at sf0.01 and
-    * sf0.1, and the perfbench sensor input 1.15 (seed 1: 100,000 rows in
-    * 86,731 groups), where the partial aggregate shipped 1.35 MB against
-    * 1.24 MB of raw rows and the second shuffle another 1.39 MB;
-    * `ScaleUp` keeps group sizes constant. */
-  private[graft] def buildDenseTable(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
-    import graft.operators.exactAvg
-    Tables.events(s, d)
-      .select(col("user_id").as("series"),
-        expr("unix_timestamp(ts) div 1800").as("b"), col("value"))
-      .repartition(col("series"))
-      .groupBy("series", "b")
-      .agg(exactAvg(col("value")).as("y"))
-      .groupBy("series")
-      .as[Long, (Long, Long, Double)]
-      .mapGroups { (k: Long, it: Iterator[(Long, Long, Double)]) =>
-        val byBucket = it.map(r => r._2 -> r._3).toMap
-        (k, byBucket.keys.min, interpolateBuckets(byBucket).toArray)
+    bucketTable(s, d).select("series", "bs", "ys")
+      .as[(Long, Array[Long], Array[Option[Double]])]
+      .flatMap { case (k, bs, ys) =>
+        val byBucket = bs.iterator.zip(ys).collect { case (b, Some(y)) => b -> y }.toMap
+        if (byBucket.isEmpty) None
+        else Some((k, byBucket.keys.min, interpolateBuckets(byBucket).toArray))
       }
-      .toDF("series", "lo", "ys")
   }
 
   /** Whole-table entry: events → per-user Holt forecast, horizon steps of

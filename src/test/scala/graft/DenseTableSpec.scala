@@ -8,14 +8,15 @@ import graft.functions.TextAnalytics
 import graft.operators.{TimeWindows, exactAvg}
 import graft.timeseries.{ArForecast, ArPoint, ArimaFit, ForecastPoint, HoltFit, HoltForecast}
 
-/** Every whole-table forecast entry reads the one memoized dense-series
-  * table ([[HoltForecast.denseTable]]), the 30-min resample groups epoch
-  * micros floored to the bucket instead of a `window()` struct, and tfidf
-  * clusters its documents by `doc_id` once. Each old formulation is kept
-  * here as the reference and must give the same rows and schema: the
-  * one-exchange `denseSeries` grouped by series, with each entry's kernel
-  * body in a `flatMapGroups`; the `window()` resample; tfidf without the
-  * `doc_id` exchange. */
+/** The 30-min resample and every whole-table forecast entry read the one
+  * memoized bucket table ([[HoltForecast.bucketTable]]) — the resample its
+  * rows, the forecasts the interpolated [[HoltForecast.denseTable]] — and
+  * tfidf clusters its documents by `doc_id` once. Each old formulation is
+  * kept here as the reference and must give the same rows and schema: the
+  * one-exchange dense series grouped by series (with the bucket key
+  * floored before 1970), with each entry's kernel body in a
+  * `flatMapGroups`; the `window()` resample; tfidf without the `doc_id`
+  * exchange. */
 class DenseTableSpec extends SparkTestBase {
   import spark.implicits._
   import SensorShuffleSpec.{denseDir, emptyDir, oneRowDir}
@@ -33,13 +34,17 @@ class DenseTableSpec extends SparkTestBase {
   }
 
   /** The dense series before it was memoized: one exchange on series, the
-    * DECIMAL mean per (series, 30-min bucket), grouped by series. */
+    * DECIMAL mean per (series, 30-min bucket), grouped by series. The key
+    * is the epoch micros floored to the bucket, also before 1970 (a
+    * double quotient: exact at these magnitudes, |q| < 2^20); a
+    * bucket with a null mean is a gap. */
   private def oldSeries(d: String): KeyValueGroupedDataset[Long, (Long, Long, Double)] =
     Tables.events(spark, d)
-      .select(col("user_id").as("series"), expr("unix_timestamp(ts) div 1800").as("b"), col("value"))
+      .select(col("user_id").as("series"), expr("floor(unix_micros(ts) / 1800000000)").as("b"), col("value"))
       .repartition(col("series"))
       .groupBy("series", "b")
       .agg(exactAvg(col("value")).as("y"))
+      .where(col("y").isNotNull)
       .groupBy("series")
       .as[Long, (Long, Long, Double)]
 
@@ -150,13 +155,70 @@ class DenseTableSpec extends SparkTestBase {
         }
       }.toDF()))
 
-  private val inputs = Seq("sf0.01" -> (() => sf01), "the 5x dense sf0.001 input" -> (() => denseDir(sf)))
+  /** sf0.01 events moved back by a whole number of 30-min buckets so that
+    * the series straddle 1970, plus series -1: values at −1 µs and −30 min
+    * (bucket −1), −30 min − 1 µs (bucket −2), −60 min − 1 s (bucket −3, a
+    * null value), −90 min − 1 s (bucket −4) and +1 s (bucket 0, a null
+    * value). */
+  private lazy val straddleDir: String = {
+    val d = Scratch.dir("dense_table_straddle")
+    val ev = Tables.events(spark, sf01)
+    val mid = ev.agg(expr("(min(unix_micros(ts)) + max(unix_micros(ts))) div 2")).head().getLong(0)
+    val shift = mid - Math.floorMod(mid, 1800000000L)
+    val series: Seq[(Long, Long, Option[Double])] = Seq((-1L, -1L, Some(1.25)),
+      (-2L, -1800000000L, Some(2.5)), (-3L, -1800000001L, Some(4.0)), (-4L, -3601000000L, None),
+      (-5L, -5401000000L, Some(8.0)), (-6L, 1000000L, None))
+    series.toDF("event_id", "us", "value")
+      .select(col("event_id"), timestamp_micros(col("us")).as("ts"), lit(-1L).as("user_id"),
+        lit("view").as("event_type"), col("value"), lit("""{"k": 1}""").as("props"))
+      .unionByName(ev.withColumn("ts", timestamp_micros(expr("unix_micros(ts)") - shift)))
+      .write.mode("overwrite").parquet(s"$d/events.parquet")
+    d
+  }
+
+  private val inputs = Seq("sf0.01" -> (() => sf01), "the 5x dense sf0.001 input" -> (() => denseDir(sf)),
+    "the 1970-straddling input" -> (() => straddleDir))
 
   for ((label, dir) <- inputs)
     test(s"every dense-table consumer equals its flatMapGroups form on $label (rows and schema)") {
       for ((name, current, ref) <- consumers)
-        assertSame(name, current(dir()), ref(dir()), nonEmpty = label == "sf0.01")
+        assertSame(name, current(dir()), ref(dir()), nonEmpty = label != "the 5x dense sf0.001 input")
     }
+
+  test("bucket means floor before 1970: -1 µs and -30 min share a bucket, -30 min - 1 µs starts the one before") {
+    val prep = HoltForecast.prep(spark, straddleDir).where(col("series") === -1L)
+      .as[(Long, Long, Double)].collect().sortBy(_._2).toSeq
+    assert(prep == Seq((-1L, -7200L, 8.0), (-1L, -5400L, 6.0), (-1L, -3600L, 4.0), (-1L, -1800L, 1.875)),
+      "null-mean buckets are gaps, interpolated inside the series and dropped at its ends")
+    val resampled = TimeWindows.resample30m(spark, straddleDir).where(col("user_id") === -1L)
+      .select(unix_seconds(col("bucket")), col("avg_value"), col("n"), col("max_value"))
+      .collect().map(_.toSeq).sortBy(_.head.asInstanceOf[Long]).toSeq
+    assert(resampled == Seq(Seq(-7200L, 8.0, 1L, 8.0), Seq(-5400L, null, 1L, null), Seq(-3600L, 4.0, 1L, 4.0),
+      Seq(-1800L, 1.875, 2L, 2.5), Seq(0L, null, 1L, null)))
+  }
+
+  test("one bucket-table build serves resample30m and then HoltForecast.forecast") {
+    Memo.clear(spark)
+    val before = Memo.buildSeconds
+    TimeWindows.resample30m(spark, sf01).count()
+    val built = Memo.buildSeconds
+    assert(built > before, "resample30m builds the bucket table")
+    HoltForecast.forecast(spark, sf01).count()
+    assert(Memo.buildSeconds == built, "the forecast rebuilt the bucket table")
+  }
+
+  test("resample30m and q_holt_prep agree on every observed bucket mean") {
+    for ((label, d) <- inputs) {
+      val observed = TimeWindows.resample30m(spark, d()).where(col("avg_value").isNotNull)
+        .select(col("user_id").as("series"), unix_seconds(col("bucket")).as("bucket"), col("avg_value"))
+      val prep = SparkEntry.queries("q_holt_prep")(spark, d())
+      assert(!observed.isEmpty, s"$label: no observed buckets")
+      assert(observed.join(prep, Seq("series", "bucket"), "left_anti").isEmpty,
+        s"$label: observed buckets missing from q_holt_prep")
+      assert(observed.join(prep, Seq("series", "bucket")).where(!(col("avg_value") <=> col("y"))).isEmpty,
+        s"$label: bucket means differ")
+    }
+  }
 
   test("the dense table holds one row per series, read by later entries without a rebuild") {
     Memo.clear(spark)
@@ -172,6 +234,9 @@ class DenseTableSpec extends SparkTestBase {
 
   test("empty and one-row events tables through the dense table: no rows, or the old rows") {
     val (empty, oneRow) = (emptyDir(sf), oneRowDir(sf))
+    assert(TimeWindows.resample30m(spark, empty).isEmpty)
+    assertSame("resample30m (one row)", TimeWindows.resample30m(spark, oneRow), windowResample(oneRow),
+      nonEmpty = true)
     for ((name, current, ref) <- consumers) {
       assert(current(empty).isEmpty, s"$name: rows from an empty table")
       assertSame(s"$name (one row)", current(oneRow), ref(oneRow), nonEmpty = false)
@@ -191,7 +256,8 @@ class DenseTableSpec extends SparkTestBase {
 
   /** sf0.001 events with `ts` replaced by bucket edges: sub-second times,
     * times before 1970 (one µs, one bucket and one µs, and 65 min before
-    * the epoch) and null, two series. */
+    * the epoch, the last alone in its bucket with a null value) and null,
+    * two series. */
   private lazy val edgeDir: String = {
     val micros: Seq[Option[Long]] = Seq(Some(-1L), Some(0L), Some(-1800000000L), Some(-1800000001L),
       Some(-3900000000L), Some(1700000000123456L), Some(1700000000999999L), Some(1699999199999999L),
@@ -203,6 +269,7 @@ class DenseTableSpec extends SparkTestBase {
       .join(ts, "i")
       .withColumn("ts", timestamp_micros(col("us")))
       .withColumn("user_id", col("i") % 2)
+      .withColumn("value", when(col("us") =!= -3900000000L, col("value")))
       .drop("i", "us")
       .write.mode("overwrite").parquet(s"$d/events.parquet")
     d
@@ -217,6 +284,32 @@ class DenseTableSpec extends SparkTestBase {
     assert(preEpoch.select("n").as[Long].collect().toSeq == Seq(2L),
       "-1 µs and -30 min share the bucket starting 30 min before the epoch")
     assert(edges.where(col("bucket").isNull).isEmpty, "null ts rows are dropped")
+    val nullBucket = edges.where(col("bucket") === timestamp_micros(lit(-5400000000L)))
+      .select("avg_value", "n", "max_value").collect().map(_.toSeq).toSeq
+    assert(nullBucket == Seq(Seq(null, 1L, null)), "an all-null-value bucket keeps a null mean and max")
+  }
+
+  /** The first 2,000 sf0.01 events (by event_id) with the first one's `ts`
+    * null, and the same table without that row. */
+  private lazy val (nullTsDir, nullTsDroppedDir) = {
+    val (d, dropped) = (Scratch.dir("dense_table_null_ts"), Scratch.dir("dense_table_null_ts_dropped"))
+    val ev = Tables.events(spark, sf01).orderBy("event_id").limit(2000).cache()
+    val first = ev.agg(min("event_id")).head().getLong(0)
+    ev.withColumn("ts", when(col("event_id") =!= first, col("ts")))
+      .write.mode("overwrite").parquet(s"$d/events.parquet")
+    ev.where(col("event_id") =!= first).write.mode("overwrite").parquet(s"$dropped/events.parquet")
+    ev.unpersist()
+    (d, dropped)
+  }
+
+  test("a null ts is dropped before bucketing by every bucket-table reader") {
+    assert(Tables.events(spark, nullTsDir).where(col("ts").isNull).count() == 1L)
+    assertSame("resample30m", TimeWindows.resample30m(spark, nullTsDir),
+      TimeWindows.resample30m(spark, nullTsDroppedDir), nonEmpty = true)
+    for ((name, current, ref) <- consumers) {
+      assertSame(name, current(nullTsDir), current(nullTsDroppedDir), nonEmpty = false)
+      assertSame(s"$name against its old form", current(nullTsDir), ref(nullTsDroppedDir), nonEmpty = false)
+    }
   }
 
   test("tfidfTopTerms equals the form without the doc_id exchange") {

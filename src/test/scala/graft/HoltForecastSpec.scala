@@ -57,14 +57,17 @@ class HoltForecastSpec extends SparkTestBase {
   }
 
   test("resample+interpolate output is bounded by input range and has no gaps") {
-    val points = Gen.nonEmptyListOf(Gen.zip(Gen.choose(0L, 86400L), Gen.choose(-50.0, 50.0)))
+    // times on both sides of 1970: buckets are floored, never 60 minutes wide
+    val points = Gen.nonEmptyListOf(Gen.zip(Gen.choose(-86400L, 86400L), Gen.choose(-50.0, 50.0)))
     check(Prop.forAll(points) { pts =>
       val out = HoltForecast.resampleInterpolate(pts, bucketSec = 1800L)
       val (lo, hi) = (pts.map(_._2).min, pts.map(_._2).max)
-      val nBuckets = pts.map(_._1 / 1800L).max - pts.map(_._1 / 1800L).min + 1
+      val buckets = pts.map(p => Math.floorDiv(p._1, 1800L))
+      val nBuckets = buckets.max - buckets.min + 1
       out.nonEmpty &&
         out.forall(v => v >= lo - 1e-9 && v <= hi + 1e-9) &&
-        out.length == nBuckets
+        out.length == nBuckets &&
+        HoltForecast.resampleArray(pts.iterator).length == nBuckets
     })
   }
 

@@ -11,9 +11,9 @@ import graft.etl.SensorEtl
 import graft.operators.{Dedup, exactAvg}
 import graft.timeseries.{ArForecast, ArPoint, ForecastPoint, HoltFit, HoltForecast}
 
-/** The sensor operators shuffle once: the ETL spine is one aggregate, the
-  * 30-min dense series is built through one exchange and then read by
-  * every forecast entry with none, and the resample is one exchange. Each
+/** The sensor operators shuffle once: the ETL spine is one aggregate, and
+  * the 30-min bucket table is built through one exchange and then read by
+  * the resample and every forecast entry with none. Each
   * old formulation is kept here as the reference — the target ⋈ pivot
   * wide table, and the groupBy → typed `groupByKey` dense series — and
   * must give the same rows and schema on sf0.01 and on a dense input
@@ -138,21 +138,22 @@ class SensorShuffleSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
     assert(eventScans(p) == 1, s"events scans:\n$p")
   }
 
-  test("the dense series table builds with one shuffle exchange (final adaptive plan, sf0.01)") {
-    val p = finalPlan(HoltForecast.buildDenseTable(spark, sf01))
+  test("the 30-min bucket table builds with one shuffle exchange (final adaptive plan, sf0.01)") {
+    val p = finalPlan(HoltForecast.buildBucketTable(spark, sf01))
     assert(shuffles(p) == 1, s"shuffle exchanges:\n$p")
   }
 
   for (q <- Seq("q_holt_forecast", "q_ar_forecast", "q_holt_prep", "q_hw_seasonal"))
     test(s"$q runs no shuffle exchange over the built dense table") {
-      HoltForecast.denseTable(spark, sf01)
+      HoltForecast.bucketTable(spark, sf01)
       val p = finalPlan(SparkEntry.queries(q)(spark, sf01))
       assert(shuffles(p) == 0, s"shuffle exchanges:\n$p")
     }
 
-  test("q_resample_30m runs one shuffle exchange (final adaptive plan, sf0.01)") {
+  test("q_resample_30m runs no shuffle exchange over the built bucket table") {
+    HoltForecast.bucketTable(spark, sf01)
     val p = finalPlan(SparkEntry.queries("q_resample_30m")(spark, sf01))
-    assert(shuffles(p) == 1, s"shuffle exchanges:\n$p")
+    assert(shuffles(p) == 0, s"shuffle exchanges:\n$p")
   }
 
   test("q_tfidf runs at most two shuffle exchanges (final adaptive plan, sf0.01)") {
