@@ -116,9 +116,6 @@ object Memo {
     }.flatten.toSet
   }
 
-  /** All keys accessed under some context so far (spec introspection). */
-  def contextedKeys: Set[String] = synchronized { consumerSets.keySet.toSet }
-
   private def mapFor(s: SparkSession): mutable.Map[String, (DataFrame, Set[Int])] =
     synchronized {
       entries.filterInPlace((sess, _) => !sess.sparkContext.isStopped)

@@ -43,10 +43,9 @@ object SparkEntry {
     StreamingGates.queries ++
     MlGates.queries
 
-  /** DuckDB oracles; keys absent here (ML fits, LSH, simhash, Holt, IVF)
-    * get the driver's weaker rows-only check — they are either seeded
-    * model fits or depend on JVM-specific hashes (xxhash64, MinHash
-    * coefficients) no other engine reproduces. */
+  /** DuckDB oracles, one per entry of [[queries]]: each replays its gate
+    * in SQL so the driver compares the rows hash-exactly
+    * (GateRegistrySpec pins one oracle per query). */
   val oracleSql: Map[String, String] =
     RelationalGates.oracles ++
     AnalyticsGates.oracles ++

@@ -40,8 +40,9 @@ object OracleCtes {
     * n)`). A bucket with a null mean is a gap, and the series spans its
     * first to last non-null mean. The common input of every
     * forecast-kernel oracle (`q_holt_prep`, `q_holt_forecast`,
-    * `q_holt_gridsearch`) — the Spark twin is `HoltForecast.denseTable`:
-    * exactAvg → `HoltForecast.interpolateBuckets`. */
+    * `q_holt_gridsearch`, `q_hw_seasonal`) — the Spark twin is
+    * `HoltForecast.denseTable`: exactAvg →
+    * `HoltForecast.interpolateBuckets`. */
   private[gates] val HoltDenseCtes: String =
     s"""m AS (
       |  SELECT user_id AS series, $Bucket30m AS b,

@@ -439,14 +439,16 @@ object TimeWindows {
     * cent sums (missing slots densified to the day mean) → a
     * series-key lag window → a typed per-row kernel (the
     * HoltForecast pattern: O(48·band) per row, no state across rows).
-    * No oracle (JVM float fold) — DtwSpec pins identity, symmetry, the
-    * unbanded O(n²) reference, and a hand-built warp example. */
+    * The slot of the day is a `pmod`, so a reading before 1970 lands in
+    * 0..47 too. Oracle: `q_dtw_shift` replays the banded DP in DuckDB;
+    * DtwSpec pins identity, symmetry, the unbanded O(n²) reference, and
+    * a hand-built warp example. */
   def dtwDayShift(s: SparkSession, d: String, band: Int = 4): DataFrame = {
     val slotUs = 1800000000L
     val dayUs = 86400000000L
     val ev = Tables.events(s, d).select(
       col("event_type"), to_date(col("ts")).as("day"),
-      expr(s"(unix_micros(ts) % $dayUs) div $slotUs").as("slot"),
+      expr(s"pmod(unix_micros(ts), $dayUs) div $slotUs").as("slot"),
       expr("cast(cast(value as decimal(18,2)) * 100 as bigint)").as("x"))
     val slots = 0 until 48
     val aggCols =

@@ -856,10 +856,10 @@ object ArForecast {
     * pure JVM math in one per-series flatMap — series where either family
     * cannot fit (too short for the deepest grid order) are dropped,
     * keeping the verdict well-defined. Deterministic (both kernels are
-    * fixed-order argmins over fixed grids); no DuckDB oracle — the
-    * walk-forward recursions are JVM float folds (the q_holt_forecast
-    * no-oracle class) — ForecastCvSpec pins winner/ratio consistency
-    * and planted series whose winner is known by construction. */
+    * fixed-order argmins over fixed grids); the DuckDB oracle checks
+    * its verdict point ([[forecastCvVerdict]]), and ForecastCvSpec pins
+    * winner/ratio consistency and planted series whose winner is known
+    * by construction. */
   def forecastCv(s: SparkSession, d: String,
       pGrid: Seq[Int] = Seq(4, 6, 8, 10), dGrid: Seq[Int] = Seq(1, 2),
       qGrid: Seq[Int] = Seq(0, 1, 2)): DataFrame = {

@@ -250,7 +250,7 @@ object HoltForecast {
     * [[denseTable]] input as [[forecast]]: a per-series `flatMap`,
     * O(buckets) per-series state; series shorter than two seasons
     * emit nothing. The DuckDB oracle replays the triple-smoothing fold
-    * with a LIST-carrying recursive CTE; HwSeasonalSpec pins
+    * with one index-ordered `list_reduce` per series; HwSeasonalSpec pins
     * exact-seasonal recovery, determinism, and the seasonal-beats-Holt
     * MSE ordering on planted data. */
   def hwForecast(s: SparkSession, d: String, alpha: Double = 0.5,

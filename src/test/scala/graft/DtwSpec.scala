@@ -1,6 +1,7 @@
 package graft
 
 import graft.operators.TimeWindows
+import org.apache.spark.sql.functions.{col, lit, timestamp_micros}
 
 /** Banded-DTW kernel + day-shift gate contracts. */
 class DtwSpec extends SparkTestBase {
@@ -54,5 +55,27 @@ class DtwSpec extends SparkTestBase {
       .as[(String, java.sql.Date, Double)].collect()
     assert(got.sortBy(r => (r._1, r._2.toString)).toSeq ==
       again.sortBy(r => (r._1, r._2.toString)).toSeq)
+  }
+
+  test("day-shift gate puts a reading before 1970 in its slot of the day") {
+    // 1969-12-30 00:00 (10.00) and 1969-12-31 00:00 (10.00) and 23:00
+    // (50.00): the last is slot 46 of its day, not slot -2
+    val dayUs = 86400000000L
+    val d = Scratch.dir("dtw_pre_epoch")
+    Seq((1L, -2 * dayUs, 10.0), (2L, -dayUs, 10.0), (3L, -3600000000L, 50.0))
+      .toDF("event_id", "us", "value")
+      .select(col("event_id"), timestamp_micros(col("us")).as("ts"), col("event_id").as("user_id"),
+        lit("temp").as("event_type"), col("value"), lit("{}").as("props"))
+      .write.mode("overwrite").parquet(s"$d/events.parquet")
+    // per-slot cent means; an empty slot takes the day mean
+    val prev = Array.fill(48)(1000.0)
+    val cur = Array.tabulate(48) {
+      case 0 => 1000.0
+      case 46 => 5000.0
+      case _ => 3000.0
+    }
+    val got = TimeWindows.dtwDayShift(spark, d)
+      .as[(String, java.sql.Date, Double)].collect().map(r => (r._1, r._2.toString, r._3)).toSeq
+    assert(got == Seq(("temp", "1969-12-31", math.sqrt(TimeWindows.dtwSq(cur, prev, 4)))))
   }
 }

@@ -4,9 +4,8 @@
 Usage: python3 tools/check.py <sfDir> <outDir>
 Reads <outDir>/<query>/ parquet (written by graft.Verify) and
 <outDir>/oracle_sql.json, registers the sfDir tables as DuckDB views,
-runs each oracle, and compares (rows, schema-by-name, values after
-sorting columns by name and rows by all columns). q_holt_forecast's
-recursive fold runs in Python over its DuckDB-computed input (holt_replay).
+runs each oracle as plain SQL, and compares (rows, schema-by-name,
+values after sorting columns by name and rows by all columns).
 """
 import json, math, sys
 import duckdb
@@ -32,33 +31,6 @@ def approx_eq(a, b):
         return af == bf or abs(af - bf) <= 1e-9 * max(1.0, abs(af), abs(bf))
     return a == b
 
-def holt_replay(con, sql):
-    """q_holt_forecast's oracle replays the Holt fold as a recursive CTE,
-    one DuckDB iteration per bucket (minutes at sf0.01). DuckDB computes
-    the trimmed dense series (every CTE up to `kept`); the same left fold,
-    alpha 0.5, beta 0.3, horizon 6, then runs here in IEEE doubles."""
-    head, sep, _ = sql.partition("rec AS (")
-    if not sep or "WITH RECURSIVE" not in head:
-        raise SystemExit("check: q_holt_forecast oracle has no rec CTE")
-    head = head[head.index("WITH RECURSIVE"):]  # drop Verify's ORDER BY wrapper
-    rows = con.sql(head.rstrip().rstrip(",") +
-                   "\nSELECT series, list(y ORDER BY jj) AS ys FROM kept GROUP BY series").fetchall()
-    out = []
-    for series, ys in rows:
-        level = ys[0]
-        trend = ys[1] - ys[0] if len(ys) > 1 else 0.0
-        for y in ys[1:]:
-            nl = 0.5 * y + (1 - 0.5) * (level + trend)
-            trend = 0.3 * (nl - level) + (1 - 0.3) * trend
-            level = nl
-        for h in range(1, 7):
-            out.append((series, h, level + h * trend, level, trend, len(ys)))
-    con.execute("CREATE OR REPLACE TEMP TABLE holt_ref (series BIGINT, step INT, "
-                "forecast DOUBLE, level DOUBLE, trend DOUBLE, n_obs INT)")
-    if out:
-        con.executemany("INSERT INTO holt_ref VALUES (?, ?, ?, ?, ?, ?)", out)
-    return con.table("holt_ref")
-
 def main(sf_dir, out_dir):
     con = duckdb.connect()
     for t in TABLES:
@@ -76,7 +48,7 @@ def main(sf_dir, out_dir):
             results[name] = {"error": f"spark read: {e}"}
             continue
         try:
-            ora_rel = holt_replay(con, sql) if name == "q_holt_forecast" else con.sql(sql)
+            ora_rel = con.sql(sql)
             ora_cols = sorted(ora_rel.columns)
             # the driver converts via pandas, where HUGEINT degrades to
             # float64 and hash-mismatches a BIGINT Spark column — flag it
