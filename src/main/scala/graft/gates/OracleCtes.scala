@@ -37,17 +37,17 @@ object OracleCtes {
   /** Shared dense-series CTE block: per-(series = user, 30-min bucket)
     * DECIMAL-exact means over events, filled by the direct-lerp
     * interpolation, re-indexed 0..n−1 per series (`idx(series, y, i,
-    * n)`). A bucket with a null mean is a gap, and the series spans its
-    * first to last non-null mean. The common input of every
-    * forecast-kernel oracle (`q_holt_prep`, `q_holt_forecast`,
-    * `q_holt_gridsearch`, `q_hw_seasonal`) — the Spark twin is
-    * `HoltForecast.denseTable`: exactAvg →
+    * n)`). A bucket with a null mean is a gap, the series spans its
+    * first to last non-null mean, and a null `user_id` is no series. The
+    * common input of every forecast-kernel oracle (`q_holt_prep`,
+    * `q_holt_forecast`, `q_holt_gridsearch`, `q_hw_seasonal`) — the Spark
+    * twin is `HoltForecast.denseTable`: exactAvg →
     * `HoltForecast.interpolateBuckets`. */
   private[gates] val HoltDenseCtes: String =
     s"""m AS (
       |  SELECT user_id AS series, $Bucket30m AS b,
       |    CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) / count(*) AS y
-      |  FROM events GROUP BY 1, 2),
+      |  FROM events WHERE user_id IS NOT NULL GROUP BY 1, 2),
       |bounds AS (
       |  SELECT series, min(b) AS mn, max(b) AS mx FROM m WHERE y IS NOT NULL GROUP BY 1),
       |spine AS (SELECT series, unnest(generate_series(mn, mx)) AS b FROM bounds),

@@ -133,13 +133,14 @@ object WindowGates {
 
   /** Eligible-series universe CTEs shared by the three ARIMA-composite
     * verdict oracles (r15): dense 30-min bucket span per series over its
-    * buckets with a value (the q_holt_prep span) and the grid-search
+    * buckets with a value (the q_holt_prep span; a null `user_id` is no
+    * series, as in `HoltForecast.denseTable`) and the grid-search
     * length rule `floor(0.8·nb) ≥ pMax + dMax + qMax + 2 = 16` applied
     * as a literal computed from the default grids (p ≤ 10, d ≤ 2, q ≤ 2). */
   private val ArimaEligibleCtes =
     s"""bounds AS (
       |  SELECT user_id AS series, max($Bucket30m) - min($Bucket30m) + 1 AS nb
-      |  FROM events WHERE value IS NOT NULL GROUP BY 1),
+      |  FROM events WHERE value IS NOT NULL AND user_id IS NOT NULL GROUP BY 1),
       |el AS (SELECT nb FROM bounds WHERE CAST(floor(0.8 * nb) AS BIGINT) >= 16),
       |ag AS (SELECT CAST(count(*) AS BIGINT) AS n_series,
       |  CAST(COALESCE(sum(nb), 0) AS BIGINT) AS sum_n_buckets FROM el)""".stripMargin

@@ -192,15 +192,18 @@ object Pipelines {
   private case class RegFit(labeled: DataFrame, train: DataFrame, predictions: DataFrame,
       r2: Double, rmse: Double, mse: Double, importances: Array[Double])
 
-  private def regressionFit(s: SparkSession, d: String): RegFit = {
-    // see classification: small feature table + per-iteration jobs (GBT
-    // launches jobs per boosting round) -> data-sized partition count
-    val labeled = TimeWindows.leadWindow(s, d)
+  /** The cached GBT fit frame of [[regressionFit]] and [[crossValidateFit]]:
+    * q_lead_window rows with `epoch_day` and `dow`; a small table read by a
+    * job per boosting round, so a data-sized partition count. */
+  private[graft] def labeledFrame(s: SparkSession, d: String): DataFrame =
+    TimeWindows.leadWindow(s, d)
       .withColumn("epoch_day", unix_timestamp(col("day").cast("timestamp")) / 86400)
       .withColumn("dow", dayofweek(col("day")).cast("double"))
       .repartition(fitPartitions(s, d))
       .cache()
 
+  private def regressionFit(s: SparkSession, d: String): RegFit = {
+    val labeled = labeledFrame(s, d)
     val assembler = new VectorAssembler()
       .setInputCols(Array("day_max", "epoch_day", "dow")).setOutputCol("features")
     val gbt = new GBTRegressor()
@@ -285,11 +288,7 @@ object Pipelines {
 
   private def crossValidateFit(s: SparkSession, d: String): CvFit = {
     import org.apache.spark.ml.tuning.{CrossValidator, ParamGridBuilder}
-    val labeled = TimeWindows.leadWindow(s, d)
-      .withColumn("epoch_day", unix_timestamp(col("day").cast("timestamp")) / 86400)
-      .withColumn("dow", dayofweek(col("day")).cast("double"))
-      .repartition(fitPartitions(s, d))
-      .cache()
+    val labeled = labeledFrame(s, d)
     try {
       val assembler = new VectorAssembler()
         .setInputCols(Array("day_max", "epoch_day", "dow")).setOutputCol("features")

@@ -11,25 +11,39 @@ import graft.timeseries.HoltForecast
   * Scale stance: the reference's `Window.partitionBy()` empty global window
   * (`/root/reference/sensor_data_regression.py:42`) is a single-partition
   * exchange — the one reference plan deliberately NOT reproduced for row
-  * level data. Every row-level window here partitions by the series key
-  * (user_id); the only global window runs on day-level aggregates (≤ one
-  * row per day), where a single partition is bounded by the calendar, not
-  * by data volume.
+  * level data. The resample, `ffill`, `interpolate` and `leadWindow` are
+  * per-row maps over the memoized one-row-per-series
+  * [[HoltForecast.bucketTable]], whose 30-min buckets nest into hours and
+  * UTC days; other row-level windows partition by the series key; the
+  * only global window runs on day-level aggregates (≤ one row per day),
+  * where a single partition is bounded by the calendar, not by volume.
   */
 object TimeWindows {
 
-  /** W1+W2 scale-safe — daily per-series max, then next-day label via
-    * lead() over a window PARTITIONED BY the series key, then dropna
-    * (cf. `sensor_data_regression.py:39-48`, with the global-window
-    * scale bug fixed per SURVEY §7). */
+  /** W1+W2 scale-safe — per-series daily max, then the next-day label
+    * (the max of the series' next day with readings), then dropna
+    * (cf. `sensor_data_regression.py:39-48`, with the global-window scale
+    * bug fixed per SURVEY §7). A per-row map over the memoized
+    * [[HoltForecast.bucketTable]], so nothing shuffles: the UTC day of
+    * bucket `b` is `floorDiv(b, 48)`, and its max is the max of its bucket
+    * maxes, ordered as Spark's `max` orders doubles. A day whose values
+    * are all null drops itself and the day before it; a null series gives
+    * no row. The Option columns keep the schema nullable. */
   def leadWindow(s: SparkSession, d: String): DataFrame = {
-    val daily = Tables.events(s, d)
-      .groupBy(col("user_id"), to_date(col("ts")).as("day"))
-      .agg(max("value").as("day_max"))
-    val w = Window.partitionBy("user_id").orderBy("day")
-    daily
-      .withColumn("next_day_max", lead(col("day_max"), 1).over(w))
-      .na.drop()
+    import s.implicits._
+    HoltForecast.bucketTable(s, d).where(col("series").isNotNull)
+      .select("series", "bs", "mxs").as[(Long, Array[Long], Array[Option[Double]])]
+      .flatMap { case (k, bs, mxs) =>
+        val days = bs.indices.groupBy(i => Math.floorDiv(bs(i), 48L)).toSeq.sortBy(_._1).map {
+          case (day, is) => (day.toInt, is.flatMap(mxs(_)).reduceOption((m, v) =>
+            if (v > m || (v.isNaN && !m.isNaN)) v else m))
+        }
+        days.zip(days.drop(1)).collect {
+          case ((day, Some(mx)), (_, Some(next))) => (Option(k), Option(day), Option(mx), Option(next))
+        }
+      }
+      .toDF("user_id", "day", "day_max", "next_day_max")
+      .withColumn("day", date_from_unix_date(col("day")))
   }
 
   /** W1 parity — the reference's GLOBAL ordered window, kept semantically
@@ -53,68 +67,65 @@ object TimeWindows {
     * and one exchange serve both. The bucket start is the epoch micros
     * floored to 30 minutes, which is `window(ts, "30 minutes").start`
     * also before 1970; rows with a null `ts` are dropped, as `window()`
-    * drops them. The `when`/`coalesce` keep the old nullability:
-    * `user_id` as read from parquet, `n` a count. */
+    * drops them; a null `user_id` is a series of its own, as in a
+    * `window()` group. The `coalesce` keeps `n` a non-null count. */
   def resample30m(s: SparkSession, d: String): DataFrame =
     HoltForecast.bucketTable(s, d)
       .select(col("series"), inline(arrays_zip(col("bs"), col("ys"), col("ns"), col("mxs"))))
-      .select(when(col("series").isNotNull, col("series")).as("user_id"),
+      .select(col("series").as("user_id"),
         timestamp_micros(col("bs") * HoltForecast.BucketMicros).as("bucket"),
         col("ys").as("avg_value"), coalesce(col("ns"), lit(0L)).as("n"), col("mxs").as("max_value"))
 
-  /** Hourly per-series means joined onto a dense per-series hour spine
-    * (generated with `sequence()` — the distributed analog of a pandas
-    * DatetimeIndex). Missing hours surface as null means, ready for
-    * ffill/interpolation. */
-  private def hourSpine(s: SparkSession, d: String): DataFrame = {
-    val f = Tables.events(s, d).where(col("user_id") < 50)
-    val hourly = f
-      .groupBy(col("user_id"), date_trunc("hour", col("ts")).as("bucket"))
-      .agg(exactAvg(col("value")).as("avg_value"))
-    val spine = f
-      .groupBy(col("user_id"))
-      .agg(date_trunc("hour", min(col("ts"))).as("mn"),
-        date_trunc("hour", max(col("ts"))).as("mx"))
-      .select(col("user_id"),
-        explode(sequence(col("mn"), col("mx"), expr("interval 1 hour"))).as("bucket"))
-    spine.join(hourly, Seq("user_id", "bucket"), "left")
+  /** The hour spine of every series below 50 as rows `(user_id, bucket,
+    * avg_value, <name>)`: one row per hour from the hour of its first
+    * 30-min bucket to the hour of its last (hour = `floorDiv(b, 2)`, the
+    * `date_trunc('hour', ts)` of its readings), the hour's `exactAvg` —
+    * the DECIMAL cent sum of its buckets over their summed row counts, or
+    * null — and `fill` of the series' hourly means. A per-row map over the
+    * memoized [[HoltForecast.bucketTable]], so nothing shuffles. */
+  private def hourly(s: SparkSession, d: String, name: String)(
+      fill: Array[Option[Double]] => Seq[Option[Double]]): DataFrame = {
+    import s.implicits._
+    HoltForecast.bucketTable(s, d).where(col("series") < 50)
+      .select("series", "bs", "ns", "cs").as[(Long, Array[Long], Array[Long], Array[Option[Long]])]
+      .flatMap { case (k, bs, ns, cs) =>
+        val h0 = Math.floorDiv(bs.head, 2L)
+        val hours = (Math.floorDiv(bs.last, 2L) - h0 + 1).toInt
+        val (cents, counts, known) = (new Array[Long](hours), new Array[Long](hours), new Array[Boolean](hours))
+        for (i <- bs.indices; h = (Math.floorDiv(bs(i), 2L) - h0).toInt) {
+          counts(h) += ns(i)
+          cs(i).foreach { c => cents(h) = Math.addExact(cents(h), c); known(h) = true }
+        }
+        val means = Array.tabulate(hours)(h =>
+          Option.when(known(h))(java.math.BigDecimal.valueOf(cents(h), 2).doubleValue / counts(h)))
+        means.iterator.zip(fill(means)).zipWithIndex.map { case ((m, f), i) => (Option(k), h0 + i, m, f) }
+      }
+      .toDF("user_id", "bucket", "avg_value", name)
+      .withColumn("bucket", timestamp_micros(col("bucket") * 3600000000L))
   }
 
-  /** W4 — forward-fill over gaps: last non-null over an ordered,
-    * series-partitioned, unbounded-preceding frame
-    * (cf. pandas `.ffill()`, `pandas_timeseries_forecast.py:65`). */
-  def ffill(s: SparkSession, d: String): DataFrame = {
-    val w = Window.partitionBy("user_id").orderBy("bucket")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    hourSpine(s, d)
-      .withColumn("filled", last(col("avg_value"), ignoreNulls = true).over(w))
-  }
+  /** W4 — forward-fill over gaps: each hour of the [[hourly]] spine takes
+    * the last non-null mean at or before it (cf. pandas `.ffill()`,
+    * `pandas_timeseries_forecast.py:65`). */
+  def ffill(s: SparkSession, d: String): DataFrame =
+    hourly(s, d, "filled")(_.toSeq.scanLeft(Option.empty[Double])((last, m) => m.orElse(last)).tail)
 
-  /** W5 — linear interpolation over gaps: previous/next non-null value and
-    * their bucket epochs via ignoreNulls last/first over forward/backward
-    * frames, then the standard lerp
-    * (cf. pandas `.interpolate('linear')`,
+  /** W5 — linear interpolation over gaps of the [[hourly]] spine: an hour
+    * between two non-null means takes the direct lerp of
+    * [[HoltForecast.interpolateBuckets]] (the IEEE expression order of the
+    * oracle's `prev + (next - prev) * (Δt / span)` window frames), an hour
+    * before the first or after the last takes that mean, and a series with
+    * no mean stays null (cf. pandas `.interpolate('linear')`,
     * `spark_pandas_timeseries_forecast.py:34-35`). */
-  def interpolate(s: SparkSession, d: String): DataFrame = {
-    val back = Window.partitionBy("user_id").orderBy("bucket")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val fwd = Window.partitionBy("user_id").orderBy("bucket")
-      .rowsBetween(Window.currentRow, Window.unboundedFollowing)
-    val markedBucket = when(col("avg_value").isNotNull, col("bucket"))
-    hourSpine(s, d)
-      .withColumn("prev_v", last(col("avg_value"), ignoreNulls = true).over(back))
-      .withColumn("prev_b", last(markedBucket, ignoreNulls = true).over(back))
-      .withColumn("next_v", first(col("avg_value"), ignoreNulls = true).over(fwd))
-      .withColumn("next_b", first(markedBucket, ignoreNulls = true).over(fwd))
-      .withColumn("interp",
-        when(col("avg_value").isNotNull, col("avg_value"))
-          .when(col("prev_v").isNull, col("next_v"))
-          .when(col("next_v").isNull, col("prev_v"))
-          .otherwise(col("prev_v") + (col("next_v") - col("prev_v")) *
-            ((unix_timestamp(col("bucket")) - unix_timestamp(col("prev_b"))).cast("double") /
-             (unix_timestamp(col("next_b")) - unix_timestamp(col("prev_b"))).cast("double"))))
-      .select("user_id", "bucket", "avg_value", "interp")
-  }
+  def interpolate(s: SparkSession, d: String): DataFrame =
+    hourly(s, d, "interp") { means =>
+      val known = means.indices.filter(means(_).isDefined)
+      if (known.isEmpty) means.toSeq
+      else {
+        val inner = HoltForecast.interpolateBuckets(known.map(i => i.toLong -> means(i).get).toMap)
+        means.indices.map(i => Some(inner(math.min(math.max(i, known.head), known.last) - known.head)))
+      }
+    }
 
   /** A5 — exact per-group quantiles (the reference's `approxQuantile` probe
     * `sensor_data_etl.py:95-98`, fixed to be per-column rather than its

@@ -34,7 +34,8 @@ case class ForecastCv(series: Long, n_buckets: Int, holt_mse: Double,
   *
   * All pure JVM math in a per-series `flatMap` over
   * [[HoltForecast.denseTable]] — same execution shape as HoltForecast (no
-  * shuffle once the shared table exists, no Python/Arrow hop).
+  * shuffle once the shared table exists, no Python/Arrow hop); a null
+  * `user_id` is no series there, so no entry forecasts it.
   */
 object ArForecast {
 

@@ -4,6 +4,7 @@ import scala.collection.immutable.ArraySeq
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.DecimalType
 import graft.{Memo, Tables}
 
 /** One raw observation of one series. */
@@ -19,12 +20,13 @@ case class ForecastPoint(series: Long, step: Int, forecast: Double,
   * series, resample to 30-min means → linear-interpolate gaps → quantile
   * trim → fit Holt's linear-trend exponential smoothing → h-step forecast.
   *
-  * Design: the paper resamples each series once and fits on that series,
-  * so the per-series 30-min bucket statistics are built once per
-  * (session, dir) as [[bucketTable]] — one shuffle on the series key, one
-  * row per series — which serves both the `resample30m` operator and
-  * [[denseTable]], the interpolated series every whole-table entry reads.
-  * Each entry is then a per-row `flatMap` that keeps the whole kernel
+  * Design: the paper resamples each series once and derives every coarser
+  * view from it, so the per-series 30-min bucket statistics are built
+  * once per (session, dir) as [[bucketTable]] — one shuffle on the series
+  * key, one row per series — and every grain nested in 30 minutes reads
+  * it (its readers are listed there). The forecast entries read
+  * [[denseTable]], which leaves a null `user_id` out, as their oracles do.
+  * Each reader is a per-row `flatMap` that keeps the whole kernel
   * inside the executor JVM: no Arrow hop, no Python worker (the boundary
   * SURVEY.md §3 E3 deletes), and no further shuffle.
   * Per-series state is O(series length after resampling), which is
@@ -163,26 +165,6 @@ object HoltForecast {
     }
   }
 
-  /** The per-group kernel: resample → interpolate → trim → Holt → h steps.
-    * The raw iterator folds straight into per-bucket sums — per-group
-    * memory is O(resampled buckets), never O(raw series), and no sort of
-    * the raw readings is needed (bucketing is order-insensitive). */
-  def forecastGroup(series: Long, readings: Iterator[Reading],
-      alpha: Double, beta: Double, horizon: Int,
-      bucketSec: Long = 1800L): Iterator[ForecastPoint] = {
-    val dense = resampleArray(readings.map(r => (r.epochSec, r.value)), bucketSec)
-    if (dense.isEmpty) Iterator.empty
-    else {
-      val ys = quantileTrim(ArraySeq.unsafeWrapArray(dense))
-      if (ys.isEmpty) Iterator.empty
-      else {
-        val (level, trend) = holtFit(ys, alpha, beta)
-        (1 to horizon).iterator.map(h =>
-          ForecastPoint(series, h, level + h * trend, level, trend, ys.length))
-      }
-    }
-  }
-
   /** The forecast kernel's deterministic input path, exposed as an
     * oracle-checkable query (VERDICT r2 item 7): per-series 30-min bucket
     * means (order-independent DECIMAL mean, see `graft.operators` package
@@ -276,14 +258,17 @@ object HoltForecast {
   private[graft] val BucketMicros = 1800000000L
 
   /** Per-series 30-min bucket statistics, one row per series:
-    * `(series, bs, ys, ns, mxs)`, parallel arrays sorted by bucket — the
-    * bucket index `b` (bucket start = b · 30 min, floored also before
+    * `(series, bs, ys, ns, mxs, cs)`, parallel arrays sorted by bucket —
+    * the bucket index `b` (bucket start = b · 30 min, floored also before
     * 1970), the DECIMAL-exact mean ([[graft.operators.exactAvg]]), the
-    * row count and the max of `value`. A bucket whose values are all null
-    * keeps a null mean and max; rows with a null `ts` are dropped. Built
-    * once per (session, dir) and memoized ([[graft.Memo]]): it is the one
-    * scan and shuffle of the readings behind both
-    * [[graft.operators.TimeWindows.resample30m]] and [[denseTable]]. A
+    * row count, the max and the DECIMAL(18,2) sum in cents of `value`. A
+    * bucket whose values are all null keeps a null mean, max and sum; rows
+    * with a null `ts` are dropped; a null `series` is a series. Built once
+    * per (session, dir) and memoized ([[graft.Memo]]): the one scan and
+    * shuffle of the readings behind [[denseTable]] and the `TimeWindows`
+    * `resample30m`, hourly `ffill`/`interpolate` (hour `floorDiv(b, 2)`)
+    * and daily `leadWindow` (day `floorDiv(b, 48)`, so the GBT fit frame
+    * too); cent sums and row counts give exact hourly means. A
     * memoized frame loses its output partitioning, so the table holds one
     * row per series, not one per (series, bucket): keyed rows would be
     * shuffled again by every consumer. */
@@ -304,7 +289,6 @@ object HoltForecast {
     * exact long arithmetic on the epoch micros. */
   private[graft] def buildBucketTable(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    import graft.operators.exactAvg
     Tables.events(s, d)
       .where(col("ts").isNotNull)
       .select(col("user_id").as("series"),
@@ -312,14 +296,18 @@ object HoltForecast {
         col("value"))
       .repartition(col("series"))
       .groupBy("series", "b")
-      .agg(exactAvg(col("value")).as("y"), count(lit(1)).as("n"), max("value").as("mx"))
+      .agg(sum(col("value").cast(DecimalType(18, 2))).as("sum"), count(lit(1)).as("n"),
+        max("value").as("mx"))
+      // exactAvg, with its DECIMAL sum kept as cents (an overflow fails the cast)
+      .select(col("series"), col("b"), (col("sum").cast("double") / col("n")).as("y"), col("n"),
+        col("mx"), (col("sum") * 100).cast("long").as("c"))
       .groupBy("series")
-      .as[Long, (Long, Long, Option[Double], Long, Option[Double])]
-      .mapGroups { (k: Long, it: Iterator[(Long, Long, Option[Double], Long, Option[Double])]) =>
+      .as[Option[Long], (Option[Long], Long, Option[Double], Long, Option[Double], Option[Long])]
+      .mapGroups { (k: Option[Long], it: Iterator[(Option[Long], Long, Option[Double], Long, Option[Double], Option[Long])]) =>
         val rs = it.toArray.sortBy(_._2)
-        (k, rs.map(_._2), rs.map(_._3), rs.map(_._4), rs.map(_._5))
+        (k, rs.map(_._2), rs.map(_._3), rs.map(_._4), rs.map(_._5), rs.map(_._6))
       }
-      .toDF("series", "bs", "ys", "ns", "mxs")
+      .toDF("series", "bs", "ys", "ns", "mxs", "cs")
   }
 
   /** The deterministic dense-series input of every whole-table forecast
@@ -328,7 +316,7 @@ object HoltForecast {
     * gaps filled by the shared [[interpolateBuckets]] direct lerp. A
     * per-row map over the memoized [[bucketTable]], so no entry shuffles.
     * A bucket with a null mean (all its values null) is a gap; a series
-    * with no mean at all is left out.
+    * with no mean at all, and the null series, are left out.
     *
     * DETERMINISM: the means come from the order-independent DECIMAL
     * `exactAvg`, not a float accumulation in iterator order, and every
@@ -339,7 +327,7 @@ object HoltForecast {
     * replay it exactly. */
   def denseTable(s: SparkSession, d: String): Dataset[(Long, Long, Array[Double])] = {
     import s.implicits._
-    bucketTable(s, d).select("series", "bs", "ys")
+    bucketTable(s, d).where(col("series").isNotNull).select("series", "bs", "ys")
       .as[(Long, Array[Long], Array[Option[Double]])]
       .flatMap { case (k, bs, ys) =>
         val byBucket = bs.iterator.zip(ys).collect { case (b, Some(y)) => b -> y }.toMap
@@ -351,9 +339,7 @@ object HoltForecast {
   /** Whole-table entry: events → per-user Holt forecast, horizon steps of
     * 30 minutes each, over the [[denseTable]] input: [[quantileTrim]]
     * (type-7 lerp) then the [[holtFit]] strict left fold, which the
-    * `q_holt_forecast` oracle replays. The raw-iterator kernel
-    * ([[forecastGroup]]/[[resampleArray]]) remains for the streaming
-    * form, where per-batch arrival order is the stream's own. */
+    * `q_holt_forecast` oracle replays. */
   def forecast(s: SparkSession, d: String,
       alpha: Double = 0.5, beta: Double = 0.3, horizon: Int = 6): DataFrame = {
     import s.implicits._

@@ -5,18 +5,23 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import scala.collection.immutable.ArraySeq
 import graft.functions.TextAnalytics
+import graft.ml.Pipelines
 import graft.operators.{TimeWindows, exactAvg}
 import graft.timeseries.{ArForecast, ArPoint, ArimaFit, ForecastPoint, HoltFit, HoltForecast}
 
-/** The 30-min resample and every whole-table forecast entry read the one
-  * memoized bucket table ([[HoltForecast.bucketTable]]) — the resample its
-  * rows, the forecasts the interpolated [[HoltForecast.denseTable]] — and
-  * tfidf clusters its documents by `doc_id` once. Each old formulation is
-  * kept here as the reference and must give the same rows and schema: the
-  * one-exchange dense series grouped by series (with the bucket key
-  * floored before 1970), with each entry's kernel body in a
-  * `flatMapGroups`; the `window()` resample; tfidf without the `doc_id`
-  * exchange. */
+/** The 30-min resample, the hourly `ffill`/`interpolate`, the daily
+  * `leadWindow` label (and so the GBT fit frame) and every whole-table
+  * forecast entry read the one memoized bucket table
+  * ([[HoltForecast.bucketTable]]) — the resample its rows, the hourly and
+  * daily readers its buckets nested into hours and days, the forecasts the
+  * interpolated [[HoltForecast.denseTable]] — and tfidf clusters its
+  * documents by `doc_id` once. Each old formulation is kept here as the
+  * reference and must give the same rows and schema: the one-exchange
+  * dense series grouped by series (with the bucket key floored before
+  * 1970), with each entry's kernel body in a `flatMapGroups`; the
+  * `window()` resample; the (user, day) max with a series-partitioned
+  * `lead`; the `sequence()` hour spine with window-frame fill and lerp;
+  * tfidf without the `doc_id` exchange. */
 class DenseTableSpec extends SparkTestBase {
   import spark.implicits._
   import SensorShuffleSpec.{denseDir, emptyDir, oneRowDir}
@@ -254,15 +259,10 @@ class DenseTableSpec extends SparkTestBase {
       .select(col("user_id"), col("window.start").as("bucket"), col("avg_value"), col("n"),
         col("max_value"))
 
-  /** sf0.001 events with `ts` replaced by bucket edges: sub-second times,
-    * times before 1970 (one µs, one bucket and one µs, and 65 min before
-    * the epoch, the last alone in its bucket with a null value) and null,
-    * two series. */
-  private lazy val edgeDir: String = {
-    val micros: Seq[Option[Long]] = Seq(Some(-1L), Some(0L), Some(-1800000000L), Some(-1800000001L),
-      Some(-3900000000L), Some(1700000000123456L), Some(1700000000999999L), Some(1699999199999999L),
-      Some(1699999200000000L), None, None, Some(-1L))
-    val d = Scratch.dir("dense_table_resample_edges")
+  /** sf0.001 events with `ts` replaced by `micros` (None is a null `ts`),
+    * two series, and a null value at 65 min before the epoch. */
+  private def edgeTable(tag: String, micros: Seq[Option[Long]]): String = {
+    val d = Scratch.dir(tag)
     val ts = micros.zipWithIndex.map { case (u, i) => (i.toLong, u) }.toDF("i", "us")
     Tables.events(spark, sf).orderBy("event_id").limit(micros.size)
       .withColumn("i", row_number().over(Window.orderBy("event_id")) - 1L)
@@ -274,6 +274,24 @@ class DenseTableSpec extends SparkTestBase {
       .write.mode("overwrite").parquet(s"$d/events.parquet")
     d
   }
+
+  /** Bucket edges: sub-second times, times before 1970 (one µs, one
+    * bucket and one µs, and 65 min before the epoch, the last alone in its
+    * bucket with a null value) and null. */
+  private val bucketEdges: Seq[Option[Long]] = Seq(Some(-1L), Some(0L), Some(-1800000000L),
+    Some(-1800000001L), Some(-3900000000L), Some(1700000000123456L), Some(1700000000999999L),
+    Some(1699999199999999L), Some(1699999200000000L), None, None, Some(-1L))
+
+  private lazy val edgeDir: String = edgeTable("dense_table_resample_edges", bucketEdges)
+
+  /** The bucket edges with their four 2023 times moved to the same
+    * offsets from 1970-01-01 01:00 (the old hour spine's window frames are
+    * quadratic in its length, so a 54-year spine would not finish), plus
+    * hour and day edges: −1 h, −1 h − 1 µs, −1 d and −1 d − 1 µs (−1 µs
+    * and 0 are bucket edges already). */
+  private lazy val gridEdgeDir: String = edgeTable("dense_table_grid_edges",
+    bucketEdges.map(_.map(us => if (us > 1600000000000000L) us - 1699999200000000L + 3600000000L else us)) ++
+      Seq(Some(-3600000000L), Some(-3600000001L), Some(-86400000000L), Some(-86400000001L)))
 
   test("resample30m equals the window() form on sf0.01, the dense input and bucket edges") {
     for ((label, d) <- inputs :+ ("bucket edges" -> (() => edgeDir)))
@@ -312,6 +330,174 @@ class DenseTableSpec extends SparkTestBase {
     }
   }
 
+  /** `leadWindow` before it read the bucket table: the (user, day) max of
+    * the events, then `lead` over a series-partitioned window, then dropna. */
+  private def oldLeadWindow(d: String): DataFrame =
+    Tables.events(spark, d)
+      .groupBy(col("user_id"), to_date(col("ts")).as("day"))
+      .agg(max("value").as("day_max"))
+      .withColumn("next_day_max", lead(col("day_max"), 1).over(Window.partitionBy("user_id").orderBy("day")))
+      .na.drop()
+
+  /** The GBT fit frame on [[oldLeadWindow]], before its round-robin split. */
+  private def oldLabeled(d: String): DataFrame =
+    oldLeadWindow(d)
+      .withColumn("epoch_day", unix_timestamp(col("day").cast("timestamp")) / 86400)
+      .withColumn("dow", dayofweek(col("day")).cast("double"))
+
+  /** The hour spine `ffill` and `interpolate` read before the bucket table:
+    * hourly means of the events joined onto a `sequence()` of hours from
+    * each series' first to last reading. */
+  private def oldHourSpine(d: String): DataFrame = {
+    val f = Tables.events(spark, d).where(col("user_id") < 50)
+    val hourly = f
+      .groupBy(col("user_id"), date_trunc("hour", col("ts")).as("bucket"))
+      .agg(exactAvg(col("value")).as("avg_value"))
+    f.groupBy(col("user_id"))
+      .agg(date_trunc("hour", min(col("ts"))).as("mn"), date_trunc("hour", max(col("ts"))).as("mx"))
+      .select(col("user_id"), explode(sequence(col("mn"), col("mx"), expr("interval 1 hour"))).as("bucket"))
+      .join(hourly, Seq("user_id", "bucket"), "left")
+  }
+
+  private val back = Window.partitionBy("user_id").orderBy("bucket")
+    .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+  private val fwd = Window.partitionBy("user_id").orderBy("bucket")
+    .rowsBetween(Window.currentRow, Window.unboundedFollowing)
+
+  private def oldFfill(d: String): DataFrame =
+    oldHourSpine(d).withColumn("filled", last(col("avg_value"), ignoreNulls = true).over(back))
+
+  private def oldInterpolate(d: String): DataFrame = {
+    val markedBucket = when(col("avg_value").isNotNull, col("bucket"))
+    oldHourSpine(d)
+      .withColumn("prev_v", last(col("avg_value"), ignoreNulls = true).over(back))
+      .withColumn("prev_b", last(markedBucket, ignoreNulls = true).over(back))
+      .withColumn("next_v", first(col("avg_value"), ignoreNulls = true).over(fwd))
+      .withColumn("next_b", first(markedBucket, ignoreNulls = true).over(fwd))
+      .withColumn("interp",
+        when(col("avg_value").isNotNull, col("avg_value"))
+          .when(col("prev_v").isNull, col("next_v"))
+          .when(col("next_v").isNull, col("prev_v"))
+          .otherwise(col("prev_v") + (col("next_v") - col("prev_v")) *
+            ((unix_timestamp(col("bucket")) - unix_timestamp(col("prev_b"))).cast("double") /
+             (unix_timestamp(col("next_b")) - unix_timestamp(col("prev_b"))).cast("double"))))
+      .select("user_id", "bucket", "avg_value", "interp")
+  }
+
+  /** (reader, current form, old formulation) for every reader that moved
+    * from the events onto the bucket table's hours and days. */
+  private val grainReaders: Seq[(String, String => DataFrame, String => DataFrame)] = Seq(
+    ("TimeWindows.leadWindow", TimeWindows.leadWindow(spark, _), oldLeadWindow),
+    ("TimeWindows.ffill", TimeWindows.ffill(spark, _), oldFfill),
+    ("TimeWindows.interpolate", TimeWindows.interpolate(spark, _), oldInterpolate))
+
+  /** Rows of `df` with the index of the partition holding each. */
+  private def placed(df: DataFrame): Seq[(Int, String)] =
+    df.rdd.mapPartitionsWithIndex((i, it) => it.map(r => (i, r.toString))).collect().sorted.toSeq
+
+  /** The GBT fit frame equals the old one on `d`, row for row in each
+    * partition of its round-robin split: the split, and so every seeded
+    * fit on it, is the old one. */
+  private def assertSameFitFrame(label: String, d: String): Unit = {
+    val cur = Pipelines.labeledFrame(spark, d)
+    try {
+      val (old, parts) = (oldLabeled(d), cur.rdd.getNumPartitions)
+      assertSame(s"fit frame on $label", cur, old, nonEmpty = false)
+      assert(TimeWindows.leadWindow(spark, d).rdd.getNumPartitions == old.rdd.getNumPartitions,
+        s"$label: leadWindow feeds the round-robin split from another partition count")
+      assert(placed(cur) == placed(old.repartition(parts)), s"$label: the round-robin split differs")
+    } finally { cur.unpersist(); () }
+  }
+
+  /** sf0.001 events with every value of one day of one series (below 50,
+    * with at least three days) null. */
+  private lazy val nullDayDir: String = {
+    val d = Scratch.dir("dense_table_null_day")
+    val ev = Tables.events(spark, sf).withColumn("day", to_date(col("ts")))
+    val (user, day) = ev.where(col("user_id") < 50).groupBy("user_id")
+      .agg(sort_array(collect_set(col("day"))).as("days"))
+      .where(size(col("days")) >= 3).orderBy("user_id")
+      .select(col("user_id"), element_at(col("days"), 2)).as[(Long, java.sql.Date)].head()
+    ev.withColumn("value", when(col("user_id") =!= user || col("day") =!= day, col("value")))
+      .drop("day").write.mode("overwrite").parquet(s"$d/events.parquet")
+    d
+  }
+
+  /** The first 500 sf0.01 events (by event_id) with the first one's
+    * user's `user_id` null, and the same table without that user's rows. */
+  private lazy val (nullUserDir, nullUserDroppedDir) = {
+    val (d, dropped) = (Scratch.dir("dense_table_null_user"), Scratch.dir("dense_table_null_user_dropped"))
+    val ev = Tables.events(spark, sf01).orderBy("event_id").limit(500).cache()
+    val user = ev.orderBy("event_id").head().getAs[Long]("user_id")
+    ev.withColumn("user_id", when(col("user_id") =!= user, col("user_id")))
+      .write.mode("overwrite").parquet(s"$d/events.parquet")
+    ev.where(col("user_id") =!= user).write.mode("overwrite").parquet(s"$dropped/events.parquet")
+    ev.unpersist()
+    (d, dropped)
+  }
+
+  private val grainInputs = inputs ++ Seq("the null-ts fixture" -> (() => nullTsDir),
+    "the bucket, hour and day edges" -> (() => gridEdgeDir),
+    "a series with an all-null-value day" -> (() => nullDayDir),
+    "a null user_id" -> (() => nullUserDir))
+
+  for ((label, dir) <- grainInputs)
+    test(s"leadWindow, ffill, interpolate and the GBT fit frame equal their old forms on $label") {
+      for ((name, current, ref) <- grainReaders)
+        assertSame(name, current(dir()), ref(dir()), nonEmpty = true)
+      assertSameFitFrame(label, dir())
+    }
+
+  test("an all-null-value day drops itself and the day before it from leadWindow") {
+    val days = oldLeadWindow(sf).select("user_id", "day").as[(Long, java.sql.Date)].collect().toSet
+    val kept = TimeWindows.leadWindow(spark, nullDayDir).select("user_id", "day").as[(Long, java.sql.Date)]
+      .collect().toSet
+    assert(days.diff(kept).size == 2 && kept.subsetOf(days), s"dropped ${days.diff(kept)}")
+  }
+
+  test("a null user_id: no reader throws, resample30m keeps its group, the forecasts leave it out") {
+    assert(Tables.events(spark, nullUserDir).where(col("user_id").isNull).count() > 0)
+    assertSame("resample30m", TimeWindows.resample30m(spark, nullUserDir), windowResample(nullUserDir),
+      nonEmpty = true)
+    assert(!TimeWindows.resample30m(spark, nullUserDir).where(col("user_id").isNull).isEmpty)
+    for ((name, current, ref) <- consumers) {
+      assertSame(name, current(nullUserDir), current(nullUserDroppedDir), nonEmpty = false)
+      assertSame(s"$name against its old form", current(nullUserDir), ref(nullUserDroppedDir), nonEmpty = false)
+    }
+  }
+
+  /** One series (user 7) over two years of 30-min buckets from
+    * 2022-01-01: a reading in every bucket but every 13th, a null value in
+    * every 101st, and every 997th bucket twice. */
+  private lazy val longDir: String = {
+    val d = Scratch.dir("dense_table_long_series")
+    spark.range(LongBuckets).where(col("id") % 13 =!= 12)
+      .withColumn("r", explode(when(col("id") % 997 === 5, array(lit(0), lit(1))).otherwise(array(lit(0)))))
+      .select((col("id") * 2 + col("r")).as("event_id"),
+        timestamp_micros(lit(1640995200000000L) + col("id") * 1800000000L +
+          (col("id") * 7919 + col("r") * 600) % 1800 * 1000000L).as("ts"),
+        lit(7L).as("user_id"), lit("view").as("event_type"),
+        when(col("id") % 101 =!= 0, round(lit(50.0) + sin(col("id") * (math.Pi / 24)) * 20 + col("r"), 2)).as("value"),
+        lit("""{"k": 1}""").as("props"))
+      .write.mode("overwrite").parquet(s"$d/events.parquet")
+    d
+  }
+
+  test("a two-year series builds one bucket-table row, and every grain reader equals its old form on it") {
+    val table = HoltForecast.bucketTable(spark, longDir)
+    val lengths = table.select(size(col("bs"))).as[Int].collect().toSeq
+    assert(lengths == Seq(LongBuckets - LongBuckets / 13), s"bucket arrays: $lengths")
+    val schema = table.schema
+    val bytes = table.queryExecution.toRdd.mapPartitions { it =>
+      val unsafe = org.apache.spark.sql.catalyst.expressions.UnsafeProjection.create(schema)
+      it.map(r => unsafe(r).getSizeInBytes.toLong)
+    }.collect().toSeq
+    info(s"the table row of ${lengths.head} buckets over a $LongBuckets-bucket span takes ${bytes.mkString} bytes")
+    assertSame("resample30m", TimeWindows.resample30m(spark, longDir), windowResample(longDir), nonEmpty = true)
+    for ((name, current, ref) <- grainReaders)
+      assertSame(name, current(longDir), ref(longDir), nonEmpty = true)
+  }
+
   test("tfidfTopTerms equals the form without the doc_id exchange") {
     def oldTfidf(d: String): DataFrame = {
       val n = Tables.rowCount(spark, s"$d/documents.parquet")
@@ -332,6 +518,9 @@ class DenseTableSpec extends SparkTestBase {
 }
 
 object DenseTableSpec {
+  /** Two years of 30-min buckets. */
+  private val LongBuckets = 2 * 365 * 48
+
   private val pGrid = Seq(4, 6, 8, 10)
   private val dGrid = Seq(1, 2)
   private val qGrid = Seq(0, 1, 2)

@@ -74,10 +74,11 @@ class MemoConsumersSpec extends SparkTestBase {
       "q_tokenize_ids", "q_collocations"),
     "text_bigram_counts:" -> Seq("q_bigram_logprob", "q_collocations"),
     "text_doc_lengths:" -> Seq("q_bm25", "q_hybrid_rrf"),
-    // the 30-min bucket table the resample and every whole-table
-    // forecast entry read
+    // the 30-min bucket table the resample, the hourly and daily windows,
+    // the GBT fit frames and every whole-table forecast entry read
     "buckets_30m:" -> Seq("q_holt_forecast", "q_ar_forecast", "q_holt_prep",
-      "q_hw_seasonal", "q_resample_30m"))
+      "q_hw_seasonal", "q_resample_30m", "q_lead_window", "q_interpolate",
+      "q_ffill", "q_ml_regression", "q_cross_val"))
 
   private lazy val observed: Unit = {
     Memo.clear(spark)

@@ -13,7 +13,8 @@ import graft.timeseries.{ArForecast, ArPoint, ForecastPoint, HoltFit, HoltForeca
 
 /** The sensor operators shuffle once: the ETL spine is one aggregate, and
   * the 30-min bucket table is built through one exchange and then read by
-  * the resample and every forecast entry with none. Each
+  * the resample, the hourly and daily windows and every forecast entry
+  * with none. Each
   * old formulation is kept here as the reference — the target ⋈ pivot
   * wide table, and the groupBy → typed `groupByKey` dense series — and
   * must give the same rows and schema on sf0.01 and on a dense input
@@ -150,11 +151,12 @@ class SensorShuffleSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
       assert(shuffles(p) == 0, s"shuffle exchanges:\n$p")
     }
 
-  test("q_resample_30m runs no shuffle exchange over the built bucket table") {
-    HoltForecast.bucketTable(spark, sf01)
-    val p = finalPlan(SparkEntry.queries("q_resample_30m")(spark, sf01))
-    assert(shuffles(p) == 0, s"shuffle exchanges:\n$p")
-  }
+  for (q <- Seq("q_resample_30m", "q_lead_window", "q_interpolate", "q_ffill"))
+    test(s"$q runs no shuffle exchange over the built bucket table") {
+      HoltForecast.bucketTable(spark, sf01)
+      val p = finalPlan(SparkEntry.queries(q)(spark, sf01))
+      assert(shuffles(p) == 0, s"shuffle exchanges:\n$p")
+    }
 
   test("q_tfidf runs at most two shuffle exchanges (final adaptive plan, sf0.01)") {
     val p = finalPlan(SparkEntry.queries("q_tfidf")(spark, sf01))
