@@ -32,4 +32,23 @@ object Session {
     spark.sparkContext.setLogLevel("WARN")
     spark
   }
+
+  /** Run `body` with the session confs `kv` set, then put each key back
+    * to its previous value, or unset it if it had none — also when
+    * `body` throws. Nested calls restore in reverse order. Every scoped
+    * conf change in graft goes through here, so the session Bench,
+    * Verify and the specs share is the same after a gate as before it.
+    * "Had none" is read from `getAll`, the explicitly set keys:
+    * `getOption` returns a registered key's default, and restoring that
+    * would leave the key set. */
+  def withConf[T](s: SparkSession, kv: (String, String)*)(body: => T): T = {
+    val set = s.conf.getAll
+    val saved = kv.map { case (k, _) => k -> set.get(k) }
+    kv.foreach { case (k, v) => s.conf.set(k, v) }
+    try body
+    finally saved.reverse.foreach {
+      case (k, Some(v)) => s.conf.set(k, v)
+      case (k, None) => s.conf.unset(k)
+    }
+  }
 }

@@ -302,17 +302,12 @@ object Pipelines {
       val evaluator = new RegressionEvaluator()
         .setLabelCol("next_day_max").setPredictionCol("prediction")
         .setMetricName("rmse")
-      // SPARK_GRAFT_CV_PARALLELISM: deployment knob for the concurrent
-      // seeded fits (results are parallelism-independent — the r15
-      // cross-parallelism determinism receipts cover this gate); used
-      // by the SCALE.md GC-lever receipts (r15 watch item: is the sf100
-      // 14 % GC fraction reducible or the floor of 13-fit churn?)
-      val cvPar = sys.env.get("SPARK_GRAFT_CV_PARALLELISM")
-        .map(_.toInt).getOrElse(4)
+      // 4 concurrent seeded fits (results are parallelism-independent —
+      // the r15 cross-parallelism determinism receipts cover this gate)
       val cv = new CrossValidator()
         .setEstimator(pipeline).setEvaluator(evaluator)
         .setEstimatorParamMaps(grid).setNumFolds(3)
-        .setParallelism(cvPar).setSeed(42L)
+        .setParallelism(4).setSeed(42L)
       val model = cv.fit(labeled)
       val metrics = grid.zip(model.avgMetrics).toSeq.map { case (pm, rmse) =>
         (pm.get(gbt.maxDepth).get, pm.get(gbt.maxIter).get, rmse)

@@ -250,16 +250,8 @@ object Layout {
     * asserts `might_contain` on the pre-checkpoint plan. Oracle = the
     * plain join: a Bloom filter has no false negatives, so the rewrite
     * is semantics-free. */
-  def bloomPrunedJoin(s: SparkSession, d: String): DataFrame = {
-    val conf = s.conf
-    val saved = bloomConfs.map(_._1).map(k => k -> conf.getOption(k))
-    bloomConfs.foreach { case (k, v) => conf.set(k, v) }
-    try bloomPrunedPlan(s, d).localCheckpoint(true)
-    finally saved.foreach {
-      case (k, Some(v)) => conf.set(k, v)
-      case (k, None)    => conf.unset(k)
-    }
-  }
+  def bloomPrunedJoin(s: SparkSession, d: String): DataFrame =
+    graft.Session.withConf(s, bloomConfs: _*)(bloomPrunedPlan(s, d).localCheckpoint(true))
 
   /** q_aqe_skew gate: AQE SKEW-JOIN SPLIT — the third runtime re-plan
     * mechanism next to [[dppJoin]] (directory pruning) and
@@ -280,16 +272,8 @@ object Layout {
     * checkpoint, and LayoutGatesSpec asserts `skew=true` in the
     * EXECUTED final adaptive plan. Oracle = the plain join aggregate:
     * runtime re-planning must change partitioning, never answers. */
-  def aqeSkewJoin(s: SparkSession, d: String): DataFrame = {
-    val conf = s.conf
-    val saved = aqeSkewConfs.map(_._1).map(k => k -> conf.getOption(k))
-    aqeSkewConfs.foreach { case (k, v) => conf.set(k, v) }
-    try aqeSkewPlan(s, d).localCheckpoint(true)
-    finally saved.foreach {
-      case (k, Some(v)) => conf.set(k, v)
-      case (k, None)    => conf.unset(k)
-    }
-  }
+  def aqeSkewJoin(s: SparkSession, d: String): DataFrame =
+    graft.Session.withConf(s, aqeSkewConfs: _*)(aqeSkewPlan(s, d).localCheckpoint(true))
 
   /** The lazy plan [[aqeSkewJoin]] materializes (split out for the
     * spec's final-plan assertion): a 70 %-hot synthetic key joins the

@@ -43,19 +43,13 @@ class LayoutGatesSpec extends SparkTestBase {
   test("q_bloom_join injects a runtime bloom filter on the application side") {
     // assert on the PRE-checkpoint plan with the same confs the gate
     // query sets (bloomPrunedJoin restores them after materializing)
-    val conf = spark.conf
-    val saved = Layout.bloomConfs.map(_._1).map(k => k -> conf.getOption(k))
-    try {
-      Layout.bloomConfs.foreach { case (k, v) => conf.set(k, v) }
+    Session.withConf(spark, Layout.bloomConfs: _*) {
       val plan = Layout.bloomPrunedPlan(spark, sf)
         .queryExecution.optimizedPlan.toString
       assert(plan.contains("might_contain"),
         s"expected an injected bloom-filter probe:\n$plan")
       assert(plan.contains("bloom_filter_agg") || plan.contains("BloomFilterAggregate"),
         s"expected the creation-side bloom aggregate:\n$plan")
-    } finally saved.foreach {
-      case (k, Some(v)) => conf.set(k, v)
-      case (k, None)    => conf.unset(k)
     }
   }
 
@@ -69,19 +63,13 @@ class LayoutGatesSpec extends SparkTestBase {
   }
 
   test("q_aqe_skew splits the hot partition in the final adaptive plan") {
-    val conf = spark.conf
-    val saved = Layout.aqeSkewConfs.map(_._1).map(k => k -> conf.getOption(k))
-    try {
-      Layout.aqeSkewConfs.foreach { case (k, v) => conf.set(k, v) }
+    Session.withConf(spark, Layout.aqeSkewConfs: _*) {
       val df = Layout.aqeSkewPlan(spark, sf)
       df.collect() // AQE finalizes THIS QueryExecution only on its own action
       val plan = df.queryExecution.executedPlan.toString
       assert(plan.contains("isFinalPlan=true"), plan)
       assert(plan.contains("skew=true"),
         s"expected the SMJ to be marked skew=true in the final plan:\n$plan")
-    } finally saved.foreach {
-      case (k, Some(v)) => conf.set(k, v)
-      case (k, None)    => conf.unset(k)
     }
   }
 

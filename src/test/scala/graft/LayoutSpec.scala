@@ -16,9 +16,7 @@ class LayoutSpec extends SparkTestBase {
     Layout.writeBucketed(daily, "daily_b", 4, "user_id")
     // disable broadcast so the planner exercises the bucketed SMJ path
     // (at 100 TB neither side would broadcast)
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    Session.withConf(spark, "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val joined = spark.table("ev_b").join(spark.table("daily_b"), "user_id")
       val plan = joined.queryExecution.executedPlan.toString
       assert(!plan.contains("ShuffleExchange") && !plan.contains("Exchange hashpartitioning"),
@@ -26,7 +24,7 @@ class LayoutSpec extends SparkTestBase {
       assert(plan.contains("SortMergeJoin"), plan)
       assert(plan.contains("Bucketed: true"), plan)
       assert(joined.count() == ev.count())
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    }
   }
 
   test("salted join result equals plain join result (skew mitigation is semantics-free)") {

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.streaming.EventStreams
 
 /** Pins the RocksDB state-store path at test time. The provider swap
-  * (EventStreams.withRocksDbStore) shipped in round 12 for the
+  * (EventStreams.rocksDbStore) shipped in round 12 for the
   * big-state replay gates was until now exercised only by the sf30
   * bench sweeps: a provider regression (bad conf key, classpath loss,
   * provider-specific state encoding bug) would have surfaced at the
@@ -25,7 +25,7 @@ class RocksDbStoreSpec extends SparkTestBase {
 
     val heap = EventStreams.runWindowedOnce(spark, dir, "rocks_heap_ref")
       .collect().toSet
-    val rocks = EventStreams.withRocksDbStore(spark) {
+    val rocks = Session.withConf(spark, EventStreams.rocksDbStore) {
       // provider is read at query START — the swap must wrap .start(),
       // which runWindowedOnce performs inside the body
       EventStreams.runWindowedOnce(spark, dir, "rocks_rocksdb")

@@ -248,6 +248,69 @@ class StreamingMediaSpec extends SparkTestBase {
     rows.foreach(r => assert(again(r.media_id) == r.content.toSeq))
   }
 
+  test("a restarted stateful stream keeps the partition count its offset log records") {
+    // four day-contiguous files, three users, one reading per user every
+    // 20 min; each day's last window is still open when its file drains,
+    // so the restart must carry live window state across
+    val base = Scratch.register(Files.createTempDirectory("graft_restart_").toString)
+    val t0 = java.sql.Timestamp.valueOf("2024-01-01 00:00:00").getTime
+    val now = System.currentTimeMillis()
+    def stage(dir: String, files: Seq[Int]): Unit = files.foreach { day =>
+      val rows = for (k <- 0 until 72; u <- 1L to 3L) yield {
+        val id = (day * 72 + k) * 3 + u
+        (id, new java.sql.Timestamp(t0 + (day * 72 + k) * 1200000L), u, "click",
+          (id * 37 % 100) / 4.0)
+      }
+      val tmp = s"$base/build_$day"
+      rows.toDF("event_id", "ts", "user_id", "event_type", "value")
+        .coalesce(1).write.mode("overwrite").parquet(tmp)
+      val src = new java.io.File(tmp).listFiles().filter(_.getName.endsWith(".parquet")).head
+      val dst = new java.io.File(s"$dir/part-$day.parquet")
+      dst.getParentFile.mkdirs()
+      Files.copy(src.toPath, dst.toPath)
+      assert(dst.setLastModified(now - 600000L + day * 30000L))
+    }
+    // a fresh session per start: the session conf is what a restart
+    // would change, and the shared one stays untouched
+    def run(src: String, out: String, parts: Int): Unit = {
+      val s = spark.newSession()
+      s.conf.set("spark.sql.shuffle.partitions", parts.toString)
+      val q = EventStreams.windowedMeans(s.readStream.schema(EventStreams.eventSchema)
+          .option("maxFilesPerTrigger", "1").parquet(src))
+        .writeStream.format("parquet")
+        .option("path", s"$out/out")
+        .option("checkpointLocation", s"$out/ckpt")
+        .outputMode("append").start()
+      q.processAllAvailable(); q.stop()
+    }
+    def rows(out: String) = spark.read.parquet(s"$out/out").collect().map(_.toSeq).toSet
+
+    stage(s"$base/once_src", 0 until 4)
+    run(s"$base/once_src", s"$base/once", 3)
+
+    stage(s"$base/src", 0 until 2)
+    run(s"$base/src", s"$base/resumed", 3)
+    val firstLeg = rows(s"$base/resumed")
+    stage(s"$base/src", 2 until 4)
+    run(s"$base/src", s"$base/resumed", 5)
+
+    val once = rows(s"$base/once")
+    assert(firstLeg.nonEmpty && firstLeg.size < once.size)
+    assert(rows(s"$base/resumed") == once)
+    val offsets = new java.io.File(s"$base/resumed/ckpt/offsets").listFiles()
+      .filter(_.getName.forall(_.isDigit)).sortBy(_.getName.toLong)
+    assert(offsets.length >= 4, offsets.map(_.getName).mkString(","))
+    val recorded = offsets.map { f =>
+      """"spark\.sql\.shuffle\.partitions":"(\d+)"""".r
+        .findFirstMatchIn(new String(Files.readAllBytes(f.toPath), "UTF-8"))
+        .map(_.group(1))
+    }
+    assert(recorded.forall(_.contains("3")), recorded.mkString(","))
+    val stateParts = new java.io.File(s"$base/resumed/ckpt/state/0").list()
+      .filter(_.forall(_.isDigit)).toSet
+    assert(stateParts == Set("0", "1", "2"), stateParts)
+  }
+
   test("streamSink gate: parquet sink holds exactly the watermark-closed windows") {
     val out = EventStreams.streamSink(spark, sf)
     val ev = Tables.events(spark, sf)
